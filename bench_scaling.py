@@ -187,7 +187,7 @@ if mode == "kernel":
     raise SystemExit(0)
 
 
-job = os.environ.get("SCT_BENCH_JOB_ROOT", "/tmp") + f"/sct_bench_job_c{{cores}}_{{mode}}_{commit_mode}"
+job = os.environ.get("SCT_BENCH_JOB_ROOT", "/tmp") + f"/sct_bench_job_c{{cores}}_{{mode}}"
 p = ep.CrawlParams(
     images_path=f"{{universe}}/images.parquet",
     seeds_path=f"{{universe}}/seeds.parquet",
@@ -198,8 +198,7 @@ p = ep.CrawlParams(
     # fat-epoch scaling pairs (the production bound stays the default)
     seller_cap=int(os.environ.get("SCT_BENCH_SCHED_CAP", 500000)),
     asin_cap=int(os.environ.get("SCT_BENCH_SCHED_CAP", 500000)),
-    max_epochs=30, use_bloom=True,
-    commit_mode={commit_mode!r})
+    max_epochs=30)
 t0 = time.perf_counter()
 summary = ep.run_crawl(spark, p, resume=False)
 wall = time.perf_counter() - t0
@@ -233,10 +232,7 @@ spark.stop()
 """
 
 
-def run_level(
-    cores: int, mode: str, n_images: int, budget_scale: float,
-    commit_mode: str = "cow",
-) -> dict:
+def run_level(cores: int, mode: str, n_images: int, budget_scale: float) -> dict:
     code = _WORKER.format(
         repo=REPO,
         cores=cores,
@@ -244,7 +240,6 @@ def run_level(
         n_images=n_images,
         universe=UNIVERSE,
         budget_scale=budget_scale,
-        commit_mode=commit_mode,
     )
     t0 = time.time()
     env = dict(os.environ)
@@ -301,15 +296,14 @@ def main() -> None:
         help="payload-light universe (sched/kernel modes only — no real image bytes)",
     )
     ap.add_argument("--tag", default="", help="suffix for the output json filename")
-    ap.add_argument("--commit-mode", choices=("cow", "delta"), default="cow")
     args = ap.parse_args()
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     pregen(args.n_images, args.budget_scale, args.lite, n_seeds=args.n_seeds)
     modes = ["sched", "decode"] if args.mode == "both" else [args.mode]
     for mode in modes:
-        lo = run_level(args.low, mode, args.n_images, args.budget_scale, args.commit_mode)
-        hi = run_level(args.high, mode, args.n_images, args.budget_scale, args.commit_mode)
+        lo = run_level(args.low, mode, args.n_images, args.budget_scale)
+        hi = run_level(args.high, mode, args.n_images, args.budget_scale)
         assert lo["fetched"] == hi["fetched"], (
             f"determinism violation: {lo['fetched']} != {hi['fetched']}"
         )

@@ -5,7 +5,7 @@ On a real cluster:
     zip -r engine.zip scrapy_cluster_test_spark
     spark-submit --py-files engine.zip run_crawl_job.py \
         --data-dir /data/universe --job-dir /jobs/crawl1 \
-        --n-images 10000000000 --use-bloom
+        --n-images 10000000000
 
 In-sandbox the same script runs under plain ``python`` (SparkSession
 falls back to local[$SPARK_GRAFT_CPUS]). A killed job resumes from the
@@ -31,9 +31,6 @@ def main() -> None:
     ap.add_argument("--seller-cap", type=int, default=5000)
     ap.add_argument("--asin-cap", type=int, default=2000)
     ap.add_argument("--max-epochs", type=int, default=50)
-    ap.add_argument("--use-bloom", action="store_true")
-    ap.add_argument("--commit-mode", choices=("cow", "delta"), default="cow",
-                    help="delta: write only touched rows per epoch (merge-on-read)")
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument("--fresh", action="store_true", help="ignore existing snapshots")
     ap.add_argument("--proxies", default=None,
@@ -70,8 +67,6 @@ def main() -> None:
         seller_cap=args.seller_cap,
         asin_cap=args.asin_cap,
         max_epochs=args.max_epochs,
-        use_bloom=args.use_bloom,
-        commit_mode=args.commit_mode,
         compact_every=args.compact_every,
         proxies_path=args.proxies,
     )

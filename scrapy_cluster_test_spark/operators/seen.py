@@ -4,43 +4,40 @@ Reference: the two-stage `$in`-probe anti-join dedup
 (pipelines.py:457-468) and `$setOnInsert` idempotent inserts
 (pipelines.py:429-444). Exact anti-join alone is correct but at a
 10^10-row frontier the probe side dominates epoch cost; the north rule
-prescribes a Bloom/cuckoo pre-filter maintained as broadcast + delta.
+prescribes a Bloom pre-filter maintained as broadcast + delta. Seen
+fingerprints are never deleted, so a Bloom filter (no deletes) suffices.
 
 Design (sandbox = small constants, same shape at scale):
 * the fp space is sharded by ``pmod(fp, n_shards)``; each shard is an
   independent Bloom bitmap built DISTRIBUTED via applyInPandas over the
-  frontier's fps (one task per shard — numpy bit-ops, no Python loop);
-* the PRODUCTION path is shard-ROUTED (build_bloom_table +
-  filter_new_routed): shard bitmaps live in a table, candidates
-  repartition by ``pmod(fp, n_shards)`` and cogroup with it, so each task
-  receives exactly ONE shard's bitmap through the shuffle — at 10^10 fps
-  and 10 bits/key (~12 GB of filter state across 256 shards) no executor
-  ever holds more than one ~48 MB shard. The whole-dict broadcast path
-  (build_bloom + filter_new) survives for small frontiers and the delta
-  lifecycle tests;
-* candidate fps probe their shard vectorized (numpy bit ops);
-  bloom-negative → **definitely new** (no false negatives), skips the join;
-  bloom-positive → exact ``left_anti`` against the frontier fps resolves
-  false positives;
+  frontier's fps (one task per shard — numpy bit-ops, no Python loop),
+  held as a TABLE (shard int, bitmap binary) — nothing is collected to
+  the driver and nothing is broadcast whole;
+* the probe is shard-ROUTED (mark_probably_seen_routed): candidates
+  repartition by ``pmod(fp, n_shards)`` and cogroup with the table, so
+  each task receives exactly ONE shard's bitmap through the shuffle — at
+  10^10 fps and 10 bits/key (~12 GB of filter state across 256 shards)
+  no executor ever holds more than one ~48 MB shard;
+* bloom-negative → **definitely new** (no false negatives), skips the
+  join; bloom-positive → exact ``left_anti`` against the frontier fps
+  resolves false positives (filter_new_routed);
 * per-epoch "delta" = the fps inserted this epoch: ``bloom_or_new`` ORs
   only the delta's bits into last epoch's bitmap table (set-union ==
   bitwise OR — bit-identical to a full rebuild, asserted in tests), and
   the epoch driver COMMITS the table with each epoch, so maintenance is
   O(new) and resume restores the exact filter state. ``bloom_m_bits``
-  sizes the table once from expected totals so it never resizes.
-  ``BloomShards.add_delta`` is the driver-side small-scale twin.
+  sizes the table up front; the epoch driver regrows it when the seen
+  set outgrows it.
 
 Equivalence with the exact path is asserted in tests/test_seen_bloom.py,
-and the bloom-enabled crawl reproduces the oracle byte-for-byte.
+and the crawl reproduces the oracle simulator byte-for-byte.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import crawlspec as spec
@@ -67,97 +64,10 @@ def _test_bits(bitmap: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return got.all(axis=1)
 
 
-@dataclass
-class BloomShards:
-    n_shards: int
-    m_bits: int  # per shard
-    k: int
-    shards: dict[int, bytes]
-
-    def probe_np(self, fps: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(fps), dtype=bool)
-        shard_of = np.mod(fps, self.n_shards)  # pmod: numpy % is non-negative here
-        for s in range(self.n_shards):
-            mask = shard_of == s
-            if not mask.any() or s not in self.shards:
-                continue
-            bitmap = np.frombuffer(self.shards[s], dtype=np.uint8)
-            pos = _probe_positions(fps[mask], self.m_bits, self.k)
-            out[mask] = _test_bits(bitmap, pos)
-        return out
-
-    def add_delta(self, fps: np.ndarray) -> "BloomShards":
-        """OR a delta of fps into the shard bitmaps (the per-epoch
-        broadcast-plus-delta update — no rebuild)."""
-        shards = {s: bytearray(b) for s, b in self.shards.items()}
-        shard_of = np.mod(fps, self.n_shards)
-        for s in range(self.n_shards):
-            mask = shard_of == s
-            if not mask.any():
-                continue
-            if s not in shards:
-                shards[s] = bytearray(self.m_bits // 8)
-            bm = np.frombuffer(bytes(shards[s]), dtype=np.uint8).copy()
-            _set_bits(bm, _probe_positions(fps[mask], self.m_bits, self.k))
-            shards[s] = bytearray(bm.tobytes())
-        return BloomShards(
-            self.n_shards, self.m_bits, self.k, {s: bytes(b) for s, b in shards.items()}
-        )
-
-
 # design bits-per-key for bloom_m_bits and the fill-ratio resize trigger
 # (10 bits/key ≈ 1% false-positive rate at k=5). Single source of truth:
-# both builders and epoch.py's resize cap_keys math derive from this.
+# bloom_m_bits and epoch.py's resize cap_keys math derive from this.
 BITS_PER_KEY = 10
-
-
-def build_bloom(
-    fps_df: DataFrame,
-    n_shards: int = 16,
-    bits_per_key: int = BITS_PER_KEY,
-    k: int = 5,
-    expected: int | None = None,
-) -> BloomShards:
-    """Distributed Bloom build: one applyInPandas task per shard sets its
-    bitmap's bits with numpy; the driver collects n_shards small byte
-    blobs. (At 10^10 keys this is the only collect — ~bits_per_key·N/8
-    bytes total, sharded.)"""
-    n = expected if expected is not None else fps_df.count()
-    m_bits = bloom_m_bits(n, n_shards, bits_per_key)
-
-    def per_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        fps = pdf["url_fp"].to_numpy(np.int64)
-        _set_bits(bitmap, _probe_positions(fps, m_bits, k))
-        return pd.DataFrame({"shard": [int(key[0])], "bitmap": [bitmap.tobytes()]})
-
-    rows = (
-        fps_df.select("url_fp")
-        .withColumn("shard", F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int"))
-        .groupBy("shard")
-        .applyInPandas(per_shard, schema="shard int, bitmap binary")
-        .collect()
-    )
-    return BloomShards(n_shards, m_bits, k, {r.shard: bytes(r.bitmap) for r in rows})
-
-
-def build_bloom_table(
-    fps_df: DataFrame,
-    n_shards: int = 16,
-    bits_per_key: int = BITS_PER_KEY,
-    k: int = 5,
-    expected: int | None = None,
-) -> tuple[DataFrame, int]:
-    """Shard bitmaps as a TABLE (shard int, bitmap binary) — nothing is
-    collected to the driver and nothing is broadcast whole. Returns
-    (shard_bitmaps_df, m_bits). The routed probe cogroups candidates with
-    this table so each task receives exactly ONE shard's bitmap via the
-    shuffle — at 10^10 fps no executor ever holds more than m_bits/8 bytes
-    of filter state (the whole-dict broadcast this replaces shipped all
-    shards to every executor: VERDICT r1 scale-killer #5)."""
-    n = expected if expected is not None else fps_df.count()
-    m_bits = bloom_m_bits(n, n_shards, bits_per_key)
-    return build_bloom_table_fixed(fps_df, m_bits, k, n_shards), m_bits
 
 
 def bloom_m_bits(
@@ -181,8 +91,11 @@ def bloom_m_bits(
 def build_bloom_table_fixed(
     fps_df: DataFrame, m_bits: int, k: int = 5, n_shards: int = 16
 ) -> DataFrame:
-    """build_bloom_table with caller-fixed m_bits — the incremental
-    lifecycle's bootstrap (size once from expected totals, never rebuild)."""
+    """Shard bitmaps as a TABLE (shard int, bitmap binary), one row per
+    non-empty shard of exactly m_bits/8 bytes (size it with ``bloom_m_bits``). The
+    routed probe cogroups candidates with this table, so each task
+    receives exactly ONE shard's bitmap via the shuffle — at 10^10 fps no
+    executor ever holds more than m_bits/8 bytes of filter state."""
 
     def per_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
@@ -283,44 +196,12 @@ def filter_new_routed(
     k: int = 5,
     n_shards: int = 16,
 ) -> DataFrame:
-    """filter_new with the shard-routed probe — identical result set to a
-    plain left_anti (asserted in tests/test_seen_bloom.py)."""
-    marked = mark_probably_seen_routed(candidates, shard_bitmaps, m_bits, k, n_shards)
-    negatives = marked.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    positives = (
-        marked.filter(F.col("maybe_seen"))
-        .drop("maybe_seen")
-        .join(frontier_fps, "url_fp", "left_anti")
-    )
-    return negatives.unionByName(positives)
-
-
-def mark_probably_seen(
-    spark: SparkSession, candidates: DataFrame, bloom: BloomShards
-) -> DataFrame:
-    """Adds ``maybe_seen`` via a vectorized pandas UDF probing the
-    broadcast shard bitmaps."""
-    bc = spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf("boolean")
-    def probe(fp: pd.Series) -> pd.Series:
-        b: BloomShards = bc.value
-        return pd.Series(b.probe_np(fp.to_numpy(np.int64)))
-
-    return candidates.withColumn("maybe_seen", probe(F.col("url_fp")))
-
-
-def filter_new(
-    spark: SparkSession,
-    candidates: DataFrame,
-    frontier_fps: DataFrame,
-    bloom: BloomShards,
-) -> DataFrame:
-    """Rows of ``candidates`` whose fp is NOT in the frontier:
+    """Rows of ``candidates`` whose fp is NOT in ``frontier_fps``:
     bloom-negatives pass directly; bloom-positives take the exact
     anti-join. Result set is identical to a plain left_anti (asserted in
-    tests) — the bloom only cuts the join's probe side."""
-    marked = mark_probably_seen(spark, candidates, bloom)
+    tests/test_seen_bloom.py) — the bloom only cuts the join's probe
+    side."""
+    marked = mark_probably_seen_routed(candidates, shard_bitmaps, m_bits, k, n_shards)
     negatives = marked.filter(~F.col("maybe_seen")).drop("maybe_seen")
     positives = (
         marked.filter(F.col("maybe_seen"))

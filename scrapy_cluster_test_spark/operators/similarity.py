@@ -5,14 +5,21 @@
   bit-reproducible and oracle-comparable (DuckDB sums with ORDER BY).
 * ``brute_force_topk`` — the exact baseline: broadcast the (small) query
   set against all vectors, window top-k.
-* ``lsh_topk`` — the scale path: random-hyperplane LSH buckets (SimHash
-  over fixed deterministic planes) shrink each query's candidate set;
-  recall measured against brute force in tests.
+* ``neardup_pairs_lsh`` / ``ann_topk_lsh`` — the scale path: random-
+  hyperplane LSH over md5-derived planes both engines can compute, so the
+  DuckDB oracle mirrors the buckets exactly. Codes and pair verification
+  run as Arrow/BLAS passes (``md5_lsh_codes_arrow``) with an exact
+  element-ordered rescore near the threshold; recall is measured against
+  brute force in tests.
+* ``ivf_topk`` / ``ivf_topk_bucketed`` — IVF-flat: deterministic centroids
+  (the first vectors by md5(id)), probe the nearest lists; the bucketed form writes lists partitioned by
+  centroid so probes prune at file listing.
 
-At 100 TB the vectors table is bucketed by the LSH key so probes touch
-only matching buckets; brute force stays as the per-bucket kernel. A
-numpy matmul variant via mapInPandas is provided for throughput
-(vectorized BLAS beats per-row folds ~50×) — same results, used by bench.
+``brute_force_topk_numpy`` is the BLAS variant of the exact baseline
+(vectorized matmul beats per-row folds ~50×) — same results.
+``md5_planes_df`` / ``md5_lsh_codes`` are the JVM-side forms of the plane
+and code derivation, the reference the Arrow kernel is pinned against
+(tests/test_similarity_arrow.py).
 """
 
 from __future__ import annotations
@@ -24,8 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
-
-from .. import crawlspec as spec
 
 
 def dot_cols(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -79,78 +84,6 @@ def brute_force_topk(
         .withColumn(
             "cosine", dot_cols("emb_q", "emb_v") / (F.col("norm_q") * F.col("norm_v"))
         )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
-    )
-
-
-# -- deterministic random hyperplanes for LSH (seeded numpy, fixed dim) ----
-
-
-def _planes(dim: int, n_planes: int, table: int = 0) -> np.ndarray:
-    rng = np.random.Generator(np.random.Philox(key=[spec.SEED, 0x51AE + table]))
-    return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 8, n_tables: int = 1):
-    """→ array<int> of bucket ids, one per hash table (independent plane
-    sets). Multi-table LSH is the standard recall lever: a true neighbor
-    is missed only if it hashes away in EVERY table."""
-    planes = np.stack([_planes(dim, n_planes, t) for t in range(n_tables)])
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @F.pandas_udf("array<int>")
-    def bucket(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy())  # (B, dim)
-        out = []
-        codes = np.empty((len(m), len(planes)), np.int64)
-        for t in range(len(planes)):
-            signs = (m @ planes[t].T) > 0
-            codes[:, t] = (signs @ weights) + (t << n_planes)  # disjoint per table
-        for row in codes:
-            out.append(row.astype(np.int32).tolist())
-        return pd.Series(out)
-
-    return bucket
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 1,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to vectors sharing a
-    random-hyperplane bucket with the query in ANY of ``n_tables`` tables.
-    ~2^n_planes/n_tables× less work than brute force; recall is measured,
-    not assumed (tests/test_similarity.py). At 100 TB the vectors table is
-    written bucketed by the table-0 key so probes are partition-pruned."""
-    bucket = lsh_bucket_udf(dim, n_planes, n_tables)
-    v = (
-        vectors.select(F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("emb_v"))
-        .withColumn("bucket", F.explode(bucket(F.col("emb_v"))))
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(emb_col).alias("emb_q")
-        ).withColumn("bucket", F.explode(bucket(F.col("emb_q"))))
-    )
-    cand = (
-        q.join(v, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "emb_q", "neighbor_id", "emb_v")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.withColumn(
-        "cosine", dot_cols("emb_q", "emb_v") / (norm_col("emb_q") * norm_col("emb_v"))
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (

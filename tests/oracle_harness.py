@@ -28,6 +28,11 @@ TABLES = (
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    # with several threads, the embedding queries leave tens of thousands of
+    # memory mappings behind in this process; near the kernel's default
+    # vm.max_map_count (65,530) DuckDB's allocations then fail with "bad
+    # allocation". One thread changes no result, only the plan's parallelism.
+    con.execute("SET threads=1")
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

@@ -3,9 +3,9 @@ outgrows the filter's design capacity, the epoch's bloom job rebuilds at
 the next power-of-two size instead of OR-ing. Results must be byte-exact
 either way (the bloom is a pure pre-filter — positives are verified by an
 exact anti-join), so these tests pin: the trigger actually fires under a
-deliberately undersized filter, the crawl log stays identical to the
-exact-path crawl, the recorded size matches the bitmap bytes on disk,
-resume restores the grown size, and bloom_resize_at=0 restores the
+deliberately undersized filter, the crawl stays identical to the
+simulator's exact seen set, the recorded size matches the bitmap bytes on
+disk, resume restores the grown size, and bloom_resize_at=0 restores the
 fixed-size pre-feature behavior."""
 
 from __future__ import annotations
@@ -18,17 +18,31 @@ from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.operators import seen as seen_ops
 from scrapy_cluster_test_spark.plans import epoch as ep
 
+from . import crawl_oracle as oracle
+
 DATA = "/tmp/sct_bresize_data"
 N = 200
+N_SEEDS = 8
+BUDGET_SCALE = 0.2
+MAX_EPOCHS = 12
 # deliberately undersized: capacity = 1024 bits/shard · 2 shards / 10 b/key
 # = 204 keys, far under the ~500-URL frontier this universe produces
-TINY = dict(use_bloom=True, bloom_expected_total=32, bloom_shards=2)
+TINY = dict(bloom_expected_total=32, bloom_shards=2)
 
 
 @pytest.fixture(scope="module")
 def universe(spark):
-    datagen.generate_all(spark, DATA, n_images=N, n_seeds=8, budget_scale=0.2)
+    datagen.generate_all(
+        spark, DATA, n_images=N, n_seeds=N_SEEDS, budget_scale=BUDGET_SCALE
+    )
     return DATA
+
+
+@pytest.fixture(scope="module")
+def sim(universe):
+    return oracle.simulate_universe(
+        DATA, N, N_SEEDS, max_epochs=MAX_EPOCHS, budget_scale=BUDGET_SCALE
+    )
 
 
 def _params(job_dir, **over):
@@ -39,17 +53,10 @@ def _params(job_dir, **over):
         robots_path=f"{DATA}/robots.parquet",
         job_dir=job_dir,
         n_images=N,
-        max_epochs=12,
+        max_epochs=MAX_EPOCHS,
     )
     kw.update(over)
     return ep.CrawlParams(**kw)
-
-
-def _log(spark, job_dir):
-    return [
-        tuple(r)
-        for r in ep.read_crawl_log(spark, job_dir).orderBy("seq").collect()
-    ]
 
 
 def _final_rec(job_dir):
@@ -64,24 +71,16 @@ def _fresh(job_dir: str) -> str:
 
 
 @pytest.fixture(scope="module")
-def exact_job(spark, universe):
-    d = _fresh("/tmp/sct_bresize_exact")
-    ep.run_crawl(spark, _params(d), resume=False)
-    return d
-
-
-@pytest.fixture(scope="module")
 def tiny_job(spark, universe):
     d = _fresh("/tmp/sct_bresize_tiny")
     ep.run_crawl(spark, _params(d, **TINY), resume=False)
     return d
 
 
-def test_resize_triggers_and_crawl_identical(spark, universe, exact_job, tiny_job):
-    a = _log(spark, exact_job)
-    b = _log(spark, tiny_job)
-    assert len(a) > 0
-    assert a == b
+def test_resize_triggers_and_crawl_identical(spark, sim, tiny_job):
+    """Every crawl carries its Bloom table between epochs, so this also
+    pins a resize under the carried state."""
+    oracle.assert_matches_simulator(spark, tiny_job, sim)
     rec = _final_rec(tiny_job)
     m0 = ep._bloom_m_bits(_params("/tmp/x", **TINY))
     assert rec["n_frontier"] > (m0 * 2) // seen_ops.BITS_PER_KEY, (
@@ -95,29 +94,20 @@ def test_resize_triggers_and_crawl_identical(spark, universe, exact_job, tiny_jo
     assert all(len(r.bitmap) == rec["bloom_m_bits"] // 8 for r in bm)
 
 
-def test_resize_under_delta_carry(spark, universe, exact_job):
-    d = _fresh("/tmp/sct_bresize_delta")
-    ep.run_crawl(spark, _params(d, commit_mode="delta", **TINY), resume=False)
-    assert _log(spark, d) == _log(spark, exact_job)
-    assert _final_rec(d)["bloom_m_bits"] > ep._bloom_m_bits(
-        _params("/tmp/x", **TINY)
-    )
-
-
-def test_resize_survives_resume(spark, universe, tiny_job):
+def test_resize_survives_resume(spark, sim, tiny_job):
     d = _fresh("/tmp/sct_bresize_resume")
     p_stop = _params(d, max_epochs=4, **TINY)
     ep.run_crawl(spark, p_stop, resume=False)
     p_go = _params(d, **TINY)
     ep.run_crawl(spark, p_go, resume=True)
-    assert _log(spark, d) == _log(spark, tiny_job)
+    oracle.assert_matches_simulator(spark, d, sim)
     assert _final_rec(d)["bloom_m_bits"] == _final_rec(tiny_job)["bloom_m_bits"]
 
 
-def test_resize_disabled_keeps_fixed_size(spark, universe, exact_job):
+def test_resize_disabled_keeps_fixed_size(spark, sim):
     d = _fresh("/tmp/sct_bresize_off")
     ep.run_crawl(spark, _params(d, bloom_resize_at=0.0, **TINY), resume=False)
-    assert _log(spark, d) == _log(spark, exact_job)
+    oracle.assert_matches_simulator(spark, d, sim)
     assert _final_rec("/tmp/sct_bresize_off")["bloom_m_bits"] == ep._bloom_m_bits(
         _params("/tmp/x", **TINY)
     )

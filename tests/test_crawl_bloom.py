@@ -1,5 +1,5 @@
-"""The bloom-enabled crawl must be byte-identical to the exact-path crawl
-(and hence to the oracle): the Bloom filter is a pure pre-filter."""
+"""The Bloom-filtered crawl must be byte-identical to the simulator, which
+keeps an exact seen set: the Bloom filter is a pure pre-filter."""
 
 from __future__ import annotations
 
@@ -8,47 +8,39 @@ import pytest
 from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.plans import epoch as ep
 
+from . import crawl_oracle as oracle
+
 DATA = "/tmp/sct_bloom_data"
 N = 200
+N_SEEDS = 8
+BUDGET_SCALE = 0.2
+MAX_EPOCHS = 12
 
 
 @pytest.fixture(scope="module")
 def universe(spark):
-    datagen.generate_all(spark, DATA, n_images=N, n_seeds=8, budget_scale=0.2)
+    datagen.generate_all(
+        spark, DATA, n_images=N, n_seeds=N_SEEDS, budget_scale=BUDGET_SCALE
+    )
     return DATA
 
 
-def _params(job_dir, **over):
-    kw = dict(
-        images_path=f"{DATA}/images.parquet",
-        seeds_path=f"{DATA}/seeds.parquet",
-        domains_path=f"{DATA}/domains.parquet",
-        robots_path=f"{DATA}/robots.parquet",
-        job_dir=job_dir,
-        n_images=N,
-        max_epochs=12,
-    )
-    kw.update(over)
-    return ep.CrawlParams(**kw)
-
-
-def _log(spark, job_dir):
-    return [
-        tuple(r)
-        for r in ep.read_crawl_log(spark, job_dir).orderBy("seq").collect()
-    ]
-
-
 def test_bloom_crawl_identical(spark, universe):
-    ep.run_crawl(spark, _params("/tmp/sct_bloom_jobE"), resume=False)
-    ep.run_crawl(spark, _params("/tmp/sct_bloom_jobB", use_bloom=True), resume=False)
-    a = _log(spark, "/tmp/sct_bloom_jobE")
-    b = _log(spark, "/tmp/sct_bloom_jobB")
-    assert len(a) > 0
-    assert a == b
-    fa = ep.read_final_frontier(spark, "/tmp/sct_bloom_jobE")
-    fb = ep.read_final_frontier(spark, "/tmp/sct_bloom_jobB")
-    key = lambda df: sorted(
-        (r.url_fp, r.status, r.crawl_time, r.retry_times) for r in df.collect()
+    job = "/tmp/sct_bloom_jobB"
+    ep.run_crawl(
+        spark,
+        ep.CrawlParams(
+            images_path=f"{DATA}/images.parquet",
+            seeds_path=f"{DATA}/seeds.parquet",
+            domains_path=f"{DATA}/domains.parquet",
+            robots_path=f"{DATA}/robots.parquet",
+            job_dir=job,
+            n_images=N,
+            max_epochs=MAX_EPOCHS,
+        ),
+        resume=False,
     )
-    assert key(fa) == key(fb)
+    sim = oracle.simulate_universe(
+        DATA, N, N_SEEDS, max_epochs=MAX_EPOCHS, budget_scale=BUDGET_SCALE
+    )
+    oracle.assert_matches_simulator(spark, job, sim)

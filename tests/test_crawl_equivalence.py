@@ -1,7 +1,7 @@
 """The north-rule gate: the Spark engine must reproduce the oracle
-simulator's EXACT crawl order and final URL-seen set under the same seed
-list and politeness budget — plus exact resume from a committed snapshot
-and partitioning-independence of the crawl log.
+simulator's EXACT crawl order, final URL state, URL-seen set and metrics
+under the same seed list and politeness budget — at two shuffle
+parallelism levels — plus exact resume from a committed epoch.
 
 (SURVEY §7 hard parts; BASELINE.json correctness gate.)
 """
@@ -15,8 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from scrapy_cluster_test_spark import datagen
-from scrapy_cluster_test_spark.oracle.simulator import simulate
 from scrapy_cluster_test_spark.plans import epoch as ep
+
+from . import crawl_oracle as oracle
 
 N_IMAGES = 300
 N_SEEDS = 12
@@ -43,78 +44,56 @@ def _params(job_dir: str, **over) -> ep.CrawlParams:
     return ep.CrawlParams(**kw)
 
 
+def _simulate(max_epochs: int = MAX_EPOCHS):
+    return oracle.simulate_universe(
+        DATA, N_IMAGES, N_SEEDS, max_epochs=max_epochs,
+        budget_scale=BUDGET_SCALE, **CAPS,
+    )
+
+
 @pytest.fixture(scope="module")
 def crawl(spark):
-    """Generate the tiny universe and run the baseline engine crawl once."""
+    """Generate the tiny universe and run the engine crawl once."""
     datagen.generate_all(
         spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS, budget_scale=BUDGET_SCALE
     )
     summary = ep.run_crawl(
         spark, _params(JOB_A, emit_child_context=True), resume=False
     )
-    sim = simulate(
-        f"{DATA}/images.parquet",
-        datagen.seed_rows(N_IMAGES, N_SEEDS),
-        N_IMAGES,
-        max_epochs=MAX_EPOCHS,
-        budget_scale=BUDGET_SCALE,
-        **CAPS,
-    )
-    return summary, sim
-
-
-def _engine_log(spark, job_dir):
-    return [
-        (r.epoch, r.seq, r.url_fp, r.domain, r.queue_kind, r.status_code, r.image_id)
-        for r in ep.read_crawl_log(spark, job_dir).orderBy("seq").collect()
-    ]
+    return summary, _simulate()
 
 
 def test_crawl_order_exact(spark, crawl):
     summary, sim = crawl
     assert summary["done"], summary
-    eng = _engine_log(spark, JOB_A)
-    ora = sorted(sim.crawl_log, key=lambda t: t[1])
+    eng = oracle.engine_log(spark, JOB_A)
+    ora = oracle.sim_log(sim)
     assert len(eng) == len(ora)
     assert eng == ora  # byte-for-byte: epoch, seq, fp, domain, kind, status, image
 
 
 def test_seen_set_exact(spark, crawl):
     _, sim = crawl
-    fr = ep.read_final_frontier(spark, JOB_A)
-    eng_seen = {r.url_fp for r in fr.select("url_fp").collect()}
-    assert eng_seen == sim.seen_set
+    assert set(oracle.engine_state(spark, JOB_A)) == sim.seen_set
 
 
 def test_final_statuses_exact(spark, crawl):
     _, sim = crawl
-    fr = ep.read_final_frontier(spark, JOB_A)
-    eng = {
-        r.url_fp: (r.status, r.retry_times, r.provider, r.priority)
-        for r in fr.collect()
-    }
-    ora = {
-        fp: (r.status, r.retry_times, r.provider, r.priority)
-        for fp, r in sim.frontier.items()
-    }
-    assert eng == ora
+    assert oracle.engine_state(spark, JOB_A) == oracle.sim_state(sim)
 
 
 def test_metrics_match(spark, crawl):
     _, sim = crawl
-    last = ep.last_committed_epoch(JOB_A)
-    eng = set()
-    for e in range(1, last + 1):
-        mdir = os.path.join(JOB_A, f"epoch={e:05d}", "metrics")
-        for r in spark.read.parquet(mdir).collect():
-            eng.add((r.epoch, r.metric_key, r.n))
-    assert eng == set(sim.metrics)
+    assert oracle.engine_metrics(spark, JOB_A) == sorted(sim.metrics)
 
 
 def test_resume_from_snapshot(spark, crawl):
     """Kill-after-epoch-3 resume: copy the first 3 committed epochs plus an
-    UNcommitted partial epoch 4, resume — final state must equal the
-    uninterrupted run (pending-flag resume semantics, pipelines.py:429-455)."""
+    UNcommitted partial epoch 4, resume — the resumed process's first
+    epoch resolves its state from the delta log instead of the carried
+    relations, and the final state must equal the simulator's
+    (pending-flag resume semantics, pipelines.py:429-455)."""
+    _, sim = crawl
     job_b = "/tmp/sct_crawl_jobB"
     if os.path.isdir(job_b):
         shutil.rmtree(job_b)
@@ -130,18 +109,12 @@ def test_resume_from_snapshot(spark, crawl):
     assert ep.last_committed_epoch(job_b) == 3
     summary = ep.run_crawl(spark, _params(job_b), resume=True)
     assert summary["done"]
-    assert _engine_log(spark, job_b) == _engine_log(spark, JOB_A)
-    fa = ep.read_final_frontier(spark, JOB_A)
-    fb = ep.read_final_frontier(spark, job_b)
-    key = lambda df: sorted(
-        (r.url_fp, r.status, r.retry_times, r.crawl_time) for r in df.collect()
-    )
-    assert key(fa) == key(fb)
+    oracle.assert_matches_simulator(spark, job_b, sim)
 
 
 def test_partitioning_independence(spark, crawl):
-    """Same crawl at a very different shuffle parallelism must produce the
-    identical log prefix — no distribution-order leaks (SURVEY §7)."""
+    """The same crawl at a very different shuffle parallelism must equal
+    the simulator too — no distribution-order leaks (SURVEY §7)."""
     job_c = "/tmp/sct_crawl_jobC"
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "3")
@@ -149,10 +122,7 @@ def test_partitioning_independence(spark, crawl):
         ep.run_crawl(spark, _params(job_c, max_epochs=4), resume=False)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    eng_c = _engine_log(spark, job_c)
-    eng_a = _engine_log(spark, JOB_A)
-    assert eng_c == eng_a[: len(eng_c)]
-    assert len(eng_c) > 0
+    oracle.assert_matches_simulator(spark, job_c, _simulate(max_epochs=4))
 
 
 def test_child_rows_reconstruct_parent_context(spark, crawl):

@@ -1,6 +1,7 @@
-"""Delta (merge-on-read) commit mode: identical crawl output to COW,
-resume-safe, and per-epoch write volume scaling with TOUCHED rows, not
-frontier size (VERDICT r1 scale-killer #4)."""
+"""The delta commit log (merge-on-read): crawl output equal to the
+simulator's, per-epoch write volume scaling with TOUCHED rows rather than
+frontier size (VERDICT r1 scale-killer #4), the carried state equal to
+the log it summarizes, and resume-safety."""
 
 from __future__ import annotations
 
@@ -12,68 +13,81 @@ import pytest
 from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.plans import epoch as ep
 
+from . import crawl_oracle as oracle
+
 DATA = "/tmp/sct_delta_data"
+N_IMAGES, N_SEEDS = 400, 8
+CAPS = dict(seller_cap=40, asin_cap=25)
+MAX_EPOCHS = 7
 
 
 @pytest.fixture(scope="module")
-def universe(spark):
-    datagen.generate_all(spark, DATA, n_images=400, n_seeds=8)
-    return DATA
+def sim(spark):
+    datagen.generate_all(spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS)
+    return oracle.simulate_universe(
+        DATA, N_IMAGES, N_SEEDS, max_epochs=MAX_EPOCHS, **CAPS
+    )
 
 
-def _params(job_dir, mode, **kw):
+def _params(job_dir, **kw):
+    kw.setdefault("compact_every", 3)
+    kw.setdefault("max_epochs", MAX_EPOCHS)
     return ep.CrawlParams(
         images_path=f"{DATA}/images.parquet",
         seeds_path=f"{DATA}/seeds.parquet",
         domains_path=f"{DATA}/domains.parquet",
         robots_path=f"{DATA}/robots.parquet",
         job_dir=job_dir,
-        n_images=400,
-        seller_cap=40,
-        asin_cap=25,
-        max_epochs=7,
-        commit_mode=mode,
+        n_images=N_IMAGES,
+        **CAPS,
         **kw,
     )
 
 
-def _log(spark, job):
-    return sorted(tuple(r) for r in ep.read_crawl_log(spark, job).collect())
+@pytest.fixture(scope="module")
+def full(spark, sim, tmp_path_factory):
+    """One uninterrupted crawl; after every epoch, the carried pending and
+    seen relations run_crawl hands to the next epoch are collected."""
+    job = str(tmp_path_factory.mktemp("delta") / "full")
+    carried = {}
+    real = ep.run_epoch
+
+    def spy(*args, **kwargs):
+        rec = real(*args, **kwargs)
+        carry = kwargs["carry_io"]
+        carried[rec["epoch"]] = (
+            sorted(tuple(r) for r in carry["pending"].collect()),
+            sorted(r.url_fp for r in carry["seen"].collect()),
+        )
+        return rec
+
+    ep.run_epoch = spy
+    try:
+        ep.run_crawl(spark, _params(job))
+    finally:
+        ep.run_epoch = real
+    return job, carried
 
 
-def _final(spark, job):
-    cols = ep.FRONTIER_COLS
-    return sorted(
-        tuple(r) for r in ep.read_final_frontier(spark, job).select(*cols).collect()
+def test_delta_equals_cow(spark, sim, full):
+    """The log-structured crawl equals the simulator, which holds the
+    whole frontier state each epoch the way a full snapshot would."""
+    job, _ = full
+    oracle.assert_matches_simulator(spark, job, sim)
+
+    # write volume: delta commits carry ONLY touched rows — well under
+    # the full frontier a snapshot per epoch would rewrite
+    epochs = range(1, ep.last_committed_epoch(job) + 1)
+    snapshot_rows = sum(ep.read_commit(job, e)["n_frontier"] for e in epochs)
+    delta_rows = sum(
+        spark.read.parquet(f"{job}/epoch={e:05d}/delta").count() for e in epochs
     )
-
-
-def _metrics(spark, job):
-    rows = spark.read.parquet(f"{job}/epoch=*/metrics")
-    return sorted(tuple(r) for r in rows.collect())
-
-
-def test_delta_equals_cow(spark, universe, tmp_path):
-    cow, dlt = str(tmp_path / "cow"), str(tmp_path / "dlt")
-    ep.run_crawl(spark, _params(cow, "cow"))
-    ep.run_crawl(spark, _params(dlt, "delta", compact_every=3))
-    assert _log(spark, dlt) == _log(spark, cow)
-    assert _final(spark, dlt) == _final(spark, cow)
-    assert _metrics(spark, dlt) == _metrics(spark, cow)
-
-    # write volume: delta commits carry ONLY touched rows
-    def rows_written(job, sub):
-        paths = glob.glob(f"{job}/epoch=0000[1-7]/{sub}")
-        return sum(spark.read.parquet(p).count() for p in paths)
-
-    cow_rows = rows_written(cow, "frontier")
-    delta_rows = rows_written(dlt, "delta")
-    assert delta_rows < cow_rows / 2, (delta_rows, cow_rows)
+    assert delta_rows < snapshot_rows / 2, (delta_rows, snapshot_rows)
 
     # compaction snapshots exist exactly at the configured cadence
     snaps = sorted(
         int(os.path.basename(os.path.dirname(pth)).split("=")[1])
-        for pth in glob.glob(f"{dlt}/epoch=*/frontier")
+        for pth in glob.glob(f"{job}/epoch=*/frontier")
     )
     assert snaps == [0, 3, 6], snaps
 
@@ -82,128 +96,67 @@ def test_delta_equals_cow(spark, universe, tmp_path):
     # task opens its own file per bucket and the merge-on-read resolve
     # re-lists ~tasks x buckets tiny files per layer — the r4-profiled
     # delta scale-killer)
-    for layer in glob.glob(f"{dlt}/epoch=*/delta"):
+    for layer in glob.glob(f"{job}/epoch=*/delta"):
         buckets = glob.glob(f"{layer}/_dbucket=*")
         files = glob.glob(f"{layer}/_dbucket=*/*.parquet")
         assert buckets and len(files) <= len(buckets), (layer, len(files))
 
 
-def test_delta_bloom_carry_equals_cow(spark, universe, tmp_path):
-    """The carried-state fast path (use_bloom=True threads checkpointed
-    pending + seen relations between epochs, skipping the per-epoch disk
-    resolve entirely) must stay byte-identical to cow. Regression test
-    for the bug where the carried SEEN set held only pending fps: the
-    Bloom exact-verification anti-join (seen.filter_new_routed) then
-    re-enqueued already-done URLs, silently shifting enqueue ranks."""
-    cow, dlt = str(tmp_path / "cow"), str(tmp_path / "dlt")
-    ep.run_crawl(spark, _params(cow, "cow", use_bloom=True))
-    ep.run_crawl(spark, _params(dlt, "delta", compact_every=3, use_bloom=True))
-    assert _log(spark, dlt) == _log(spark, cow)
-    assert _final(spark, dlt) == _final(spark, cow)
+def test_delta_bloom_carry_equals_cow(spark, full):
+    """The carried state IS the committed log: after every epoch the
+    carried pending relation equals the disk resolve's pending rows, and
+    the carried seen set equals its fps. Regression test for the bug
+    where the carried SEEN set held only pending fps: the Bloom
+    exact-verification anti-join (seen.filter_new_routed) then
+    re-enqueued already-done URLs."""
+    job, carried = full
+    assert sorted(carried) == list(range(1, ep.last_committed_epoch(job) + 1))
+    for e, (pending, seen) in carried.items():
+        state = ep._read_frontier_state(spark, job, e)
+        disk_pending = sorted(
+            tuple(r) for r in state.filter("status = 'pending'").collect()
+        )
+        assert pending == disk_pending, e
+        assert seen == sorted(r.url_fp for r in state.select("url_fp").collect()), e
 
-    # and a mid-chain resume (fresh process state: carry starts empty,
-    # first epoch falls back to the disk resolve) converges identically
+
+def test_delta_resume_mid_chain(spark, sim, tmp_path):
+    """Kill after a committed delta epoch (one past the compaction at 3)
+    → rerun resumes from the log and converges to the simulator."""
     part = str(tmp_path / "part")
-    p_short = _params(part, "delta", compact_every=3, use_bloom=True)
-    p_short.max_epochs = 4
-    ep.run_crawl(spark, p_short)
-    ep.run_crawl(spark, _params(part, "delta", compact_every=3, use_bloom=True))
-    assert _log(spark, part) == _log(spark, cow)
+    ep.run_crawl(spark, _params(part, max_epochs=4))
+    ep.run_crawl(spark, _params(part))  # resume=True continues from epoch 4
+    oracle.assert_matches_simulator(spark, part, sim)
 
 
-def test_delta_resume_mid_chain(spark, universe, tmp_path):
-    """Kill after a committed delta epoch (no compaction yet) → rerun
-    resumes and converges to the same final state as an uninterrupted
-    run."""
-    full, part = str(tmp_path / "full"), str(tmp_path / "part")
-    ep.run_crawl(spark, _params(full, "delta", compact_every=3))
-
-    p_short = _params(part, "delta", compact_every=3)
-    p_short.max_epochs = 4  # stops mid delta-chain (last compaction at 3)
-    ep.run_crawl(spark, p_short)
-    p_rest = _params(part, "delta", compact_every=3)
-    ep.run_crawl(spark, p_rest)  # resume=True continues from epoch 4
-    assert _log(spark, part) == _log(spark, full)
-    assert _final(spark, part) == _final(spark, full)
-
-
-def test_resume_compacts_long_chain(spark, universe, tmp_path):
+def test_resume_compacts_long_chain(spark, sim, tmp_path):
     """Resume-time carry warm-up (VERDICT r4 item #7): when the delta
     chain since the last compaction exceeds compact_every, resume writes
     ONE compaction snapshot up front so the first epoch's disk resolve is
     bounded by compact_every layers — and the crawl output is unchanged."""
-    full, part = str(tmp_path / "full"), str(tmp_path / "part")
-    ep.run_crawl(spark, _params(full, "delta", compact_every=3))
-
+    part = str(tmp_path / "part")
     # die at epoch 4 with NO in-run compaction (cadence larger than the
     # run) → chain base is the bootstrap snapshot, 4 delta layers deep
-    p_short = _params(part, "delta", compact_every=100)
-    p_short.max_epochs = 4
-    ep.run_crawl(spark, p_short)
+    ep.run_crawl(spark, _params(part, compact_every=100, max_epochs=4))
     assert ep._frontier_base_epoch(part, 4) == 0
     # resume with the normal cadence: 4 >= 3 → compaction fires at the
     # resume point before the first epoch runs
-    ep.run_crawl(spark, _params(part, "delta", compact_every=3))
+    ep.run_crawl(spark, _params(part))
     assert os.path.isdir(f"{part}/epoch=00004/frontier")
     assert ep._frontier_base_epoch(part, 4) == 4
     assert not os.path.isdir(f"{part}/epoch=00004/_frontier_compact_tmp")
-    assert _log(spark, part) == _log(spark, full)
-    assert _final(spark, part) == _final(spark, full)
+    oracle.assert_matches_simulator(spark, part, sim)
 
 
-def test_delta_torn_write_ignored(spark, universe, tmp_path):
+def test_delta_torn_write_ignored(spark, sim, tmp_path):
     """An uncommitted (torn) delta epoch is discarded on resume."""
     job = str(tmp_path / "torn")
-    p = _params(job, "delta", compact_every=3)
-    p.max_epochs = 3
-    ep.run_crawl(spark, p)
+    ep.run_crawl(spark, _params(job, max_epochs=3))
     # fake a torn epoch 4: delta dir present, no _COMMIT
     torn = f"{job}/epoch=00004/delta"
     os.makedirs(torn)
     spark.read.parquet(f"{job}/epoch=00003/delta").limit(3).write.mode(
         "overwrite"
     ).parquet(torn)
-    p2 = _params(job, "delta", compact_every=3)
-    out = ep.run_crawl(spark, p2)
-    ref_job = str(tmp_path / "ref")
-    ep.run_crawl(spark, _params(ref_job, "delta", compact_every=3))
-    assert _log(spark, job) == _log(spark, ref_job)
-
-
-def test_delta_bucket_pruning(spark, universe, tmp_path):
-    """VERDICT r2 item #5: delta files are partitioned by
-    pmod(domain_hash, N_LINEAGE_BUCKETS); a bucket-scoped merge-on-read
-    touches ONLY that bucket's delta partitions (checked via inputFiles)
-    and returns exactly the full overlay filtered to the bucket."""
-    from pyspark.sql import functions as F
-
-    job = str(tmp_path / "bkt")
-    ep.run_crawl(spark, _params(job, "delta", compact_every=100))
-    last = ep.last_committed_epoch(job)
-    assert last and last >= 2
-    # every committed delta epoch wrote _dbucket=K subdirs only for the
-    # buckets it touched
-    ddirs = sorted(glob.glob(f"{job}/epoch=*/delta"))
-    assert ddirs
-    for d in ddirs:
-        subs = sorted(os.listdir(d))
-        assert all(
-            s.startswith(("_dbucket=", "_", ".")) for s in subs
-        ), subs
-
-    b = int(
-        os.path.basename(
-            sorted(glob.glob(f"{ddirs[-1]}/_dbucket=*"))[0]
-        ).split("=")[1]
-    )
-    scoped = ep._read_frontier_state(spark, job, last, buckets=[b])
-    delta_files = [f for f in scoped.inputFiles() if "/delta/" in f]
-    assert delta_files, "scoped read saw no delta files"
-    assert all(f"_dbucket={b}/" in f for f in delta_files), delta_files[:5]
-
-    full = ep._read_frontier_state(spark, job, last).filter(
-        F.pmod(F.col("domain_hash"), F.lit(ep.N_LINEAGE_BUCKETS)) == b
-    )
-    assert sorted(tuple(r) for r in scoped.collect()) == sorted(
-        tuple(r) for r in full.collect()
-    )
+    ep.run_crawl(spark, _params(job))
+    oracle.assert_matches_simulator(spark, job, sim)

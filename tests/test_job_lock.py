@@ -87,7 +87,6 @@ def test_fence_blocks_usurped_commit(spark, universe, tmp_path):
             _params(job),
             2,
             state["seq_base"],
-            state.get("n_frontier"),
             prev_state=state,
             fence=lambda: False,
         )

@@ -50,29 +50,26 @@ def test_salting_preserves_rows(spark):
 
 
 def test_crawl_with_salting_identical(spark, tmp_path):
-    """Engine outputs must be byte-identical with fetch_partitions set —
+    """Engine outputs must equal the simulator with fetch_partitions set —
     salting changes placement, never the schedule."""
     from scrapy_cluster_test_spark import datagen
     from scrapy_cluster_test_spark.plans import epoch as ep
 
+    from . import crawl_oracle as oracle
+
     data = str(tmp_path / "data")
     datagen.generate_all(spark, data, n_images=80, n_seeds=5, budget_scale=0.5)
-
-    def run(job, **over):
-        p = ep.CrawlParams(
-            images_path=f"{data}/images.parquet",
-            seeds_path=f"{data}/seeds.parquet",
-            domains_path=f"{data}/domains.parquet",
-            robots_path=f"{data}/robots.parquet",
-            job_dir=str(tmp_path / job),
-            n_images=80,
-            max_epochs=10,
-            **over,
-        )
-        ep.run_crawl(spark, p, resume=False)
-        return [
-            tuple(r)
-            for r in ep.read_crawl_log(spark, p.job_dir).orderBy("seq").collect()
-        ]
-
-    assert run("plain") == run("salted", fetch_partitions=6, salt_buckets=8)
+    p = ep.CrawlParams(
+        images_path=f"{data}/images.parquet",
+        seeds_path=f"{data}/seeds.parquet",
+        domains_path=f"{data}/domains.parquet",
+        robots_path=f"{data}/robots.parquet",
+        job_dir=str(tmp_path / "salted"),
+        n_images=80,
+        max_epochs=10,
+        fetch_partitions=6,
+        salt_buckets=8,
+    )
+    ep.run_crawl(spark, p, resume=False)
+    sim = oracle.simulate_universe(data, 80, 5, max_epochs=10, budget_scale=0.5)
+    oracle.assert_matches_simulator(spark, p.job_dir, sim)

@@ -1,9 +1,9 @@
 """Bloom seen-filter: no false negatives, same result set as exact
-anti-join, delta updates, and sane false-positive rate."""
+anti-join, incremental updates bit-identical to a rebuild, and a sane
+false-positive rate."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,18 +22,24 @@ def fps(spark):
     return seen_df, cand_df
 
 
+def _table(fps_df, expected=20000):
+    m_bits = seen.bloom_m_bits(expected)
+    return seen.build_bloom_table_fixed(fps_df, m_bits), m_bits
+
+
 def test_bloom_no_false_negatives(spark, fps):
     seen_df, _ = fps
-    bloom = seen.build_bloom(seen_df)
-    marked = seen.mark_probably_seen(spark, seen_df, bloom)
+    table, m_bits = _table(seen_df)
+    marked = seen.mark_probably_seen_routed(seen_df, table, m_bits)
     assert marked.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_bloom_filter_new_equals_exact(spark, fps):
     seen_df, cand_df = fps
-    bloom = seen.build_bloom(seen_df)
+    table, m_bits = _table(seen_df)
     via_bloom = {
-        r.url_fp for r in seen.filter_new(spark, cand_df, seen_df, bloom).collect()
+        r.url_fp
+        for r in seen.filter_new_routed(cand_df, seen_df, table, m_bits).collect()
     }
     exact = {r.url_fp for r in cand_df.join(seen_df, "url_fp", "left_anti").collect()}
     assert via_bloom == exact
@@ -42,25 +48,12 @@ def test_bloom_filter_new_equals_exact(spark, fps):
 
 def test_bloom_fp_rate(spark, fps):
     seen_df, cand_df = fps
-    bloom = seen.build_bloom(seen_df)
+    table, m_bits = _table(seen_df)
     fresh = cand_df.join(seen_df, "url_fp", "left_anti")
-    marked = seen.mark_probably_seen(spark, fresh, bloom)
+    marked = seen.mark_probably_seen_routed(fresh, table, m_bits)
     fp_rate = marked.filter(F.col("maybe_seen")).count() / fresh.count()
     # 10 bits/key, k=5 → theoretical ~1%; allow slack
     assert fp_rate < 0.05, fp_rate
-
-
-def test_bloom_delta_update(spark, fps):
-    seen_df, cand_df = fps
-    bloom = seen.build_bloom(seen_df)
-    delta = np.array(
-        [r.url_fp for r in cand_df.limit(500).collect()], dtype=np.int64
-    )
-    bloom2 = bloom.add_delta(delta)
-    assert bool(bloom2.probe_np(delta).all())
-    # old keys still present
-    old = np.array([r.url_fp for r in seen_df.limit(500).collect()], dtype=np.int64)
-    assert bool(bloom2.probe_np(old).all())
 
 
 def test_routed_probe_equals_exact(spark):
@@ -77,7 +70,8 @@ def test_routed_probe_equals_exact(spark):
         (F.xxhash64(F.col("id").cast("string"))).alias("url_fp"),
         F.col("id").alias("payload"),
     )
-    shard_bitmaps, m_bits = seen.build_bloom_table(frontier, n_shards=8)
+    m_bits = seen.bloom_m_bits(5000, n_shards=8)
+    shard_bitmaps = seen.build_bloom_table_fixed(frontier, m_bits, n_shards=8)
     routed = seen.filter_new_routed(
         cands, frontier, shard_bitmaps, m_bits, n_shards=8
     )

@@ -2,15 +2,15 @@
 ``spark-submit --py-files engine.zip run_crawl_job.py`` — the package is
 shipped as a zip (driver AND python workers import it from there, i.e.
 the same mechanism a multi-executor cluster uses), and the submitted job
-produces the byte-identical crawl log the in-process engine produces,
-then resumes as a no-op when re-submitted (Q14 exactly-once).
+produces the crawl log, final state and metrics of the in-process
+simulator, then resumes as a no-op when re-submitted (Q14 exactly-once).
 
 Reference parity: the reference deploys crawlers as ansible-shipped
 processes (reference: ansible/roles/crawler); here deployment is the
 standard Spark artifact path. Sandbox stand-in for "multi-executor": the
 submit runs at a parallelism level (local[4]) different from the
-in-process session's, so log equality also re-evidences partitioning
-independence across the deployment boundary.
+test session's, so equality also re-evidences partitioning independence
+across the deployment boundary.
 """
 
 from __future__ import annotations
@@ -24,7 +24,8 @@ import zipfile
 import pytest
 
 from scrapy_cluster_test_spark import datagen
-from scrapy_cluster_test_spark.plans import epoch as ep
+
+from . import crawl_oracle as oracle
 
 N_IMAGES = 300
 N_SEEDS = 12
@@ -34,7 +35,6 @@ MAX_EPOCHS = 40
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = "/tmp/sct_submit"
 DATA = f"{WORK}/data"
-JOB_IN = f"{WORK}/job_inproc"
 JOB_SUB = f"{WORK}/job_submit"
 
 SPARK_SUBMIT = shutil.which("spark-submit")
@@ -76,32 +76,12 @@ def _submit(job_dir: str, cwd: str, env: dict) -> dict:
     return json.loads(lines[-1])
 
 
-def _log(spark, job_dir):
-    return [
-        (r.epoch, r.seq, r.url_fp, r.domain, r.queue_kind, r.status_code, r.image_id)
-        for r in ep.read_crawl_log(spark, job_dir).orderBy("seq").collect()
-    ]
-
-
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
 def test_spark_submit_py_files_matches_inprocess(spark):
     shutil.rmtree(WORK, ignore_errors=True)
     os.makedirs(WORK)
     datagen.generate_all(
         spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS, budget_scale=BUDGET_SCALE
-    )
-    summary_in = ep.run_crawl(
-        spark,
-        ep.CrawlParams(
-            images_path=f"{DATA}/images.parquet",
-            seeds_path=f"{DATA}/seeds.parquet",
-            domains_path=f"{DATA}/domains.parquet",
-            robots_path=f"{DATA}/robots.parquet",
-            job_dir=JOB_IN,
-            n_images=N_IMAGES,
-            max_epochs=MAX_EPOCHS,
-        ),
-        resume=False,
     )
 
     # stage an isolated submit dir: the script WITHOUT the package next to
@@ -116,13 +96,16 @@ def test_spark_submit_py_files_matches_inprocess(spark):
     }
     summary_sub = _submit(JOB_SUB, WORK, env)
 
-    assert summary_sub["done"] and summary_in["done"]
-    assert summary_sub["total_fetched"] == summary_in["total_fetched"]
-    assert _log(spark, JOB_SUB) == _log(spark, JOB_IN)
+    sim = oracle.simulate_universe(
+        DATA, N_IMAGES, N_SEEDS, max_epochs=MAX_EPOCHS, budget_scale=BUDGET_SCALE
+    )
+    assert summary_sub["done"]
+    assert summary_sub["total_fetched"] == len(sim.crawl_log)
+    oracle.assert_matches_simulator(spark, JOB_SUB, sim)
 
     # re-submitting the finished job resumes from the last committed epoch
     # and is a no-op: same totals, no new epochs
     summary_again = _submit(JOB_SUB, WORK, env)
     assert summary_again["total_fetched"] == summary_sub["total_fetched"]
     assert summary_again["epochs"] == summary_sub["epochs"]
-    assert _log(spark, JOB_SUB) == _log(spark, JOB_IN)
+    oracle.assert_matches_simulator(spark, JOB_SUB, sim)
