@@ -94,6 +94,29 @@ def test_resize_triggers_and_crawl_identical(spark, sim, tiny_job):
     assert all(len(r.bitmap) == rec["bloom_m_bits"] // 8 for r in bm)
 
 
+def test_resize_under_delta_carry(spark, tiny_job):
+    """The carried Bloom table, grown mid-crawl, must hold every URL
+    committed by its epoch: sizes never shrink, bitmap bytes match each
+    epoch's record, and each epoch's table has no false negative over that
+    epoch's frontier state. Checking only the last epoch is not enough — a
+    URL dropped at a resize re-enters as "new" and is OR-ed back later."""
+    last = ep.last_committed_epoch(tiny_job)
+    sizes = []
+    for e in range(last + 1):
+        m = ep.read_commit(tiny_job, e)["bloom_m_bits"]
+        table = spark.read.parquet(f"{tiny_job}/epoch={e:05d}/bloom")
+        assert all(len(r.bitmap) == m // 8 for r in table.collect()), e
+        fps = ep._read_frontier_state(spark, tiny_job, e).select("url_fp")
+        marked = seen_ops.mark_probably_seen_routed(
+            fps, table, m, n_shards=TINY["bloom_shards"]
+        )
+        assert fps.count() > 0
+        assert marked.filter(~marked.maybe_seen).count() == 0, e
+        sizes.append(m)
+    assert sizes == sorted(sizes)
+    assert sizes[-1] > sizes[0], "resize never fired under the carry"
+
+
 def test_resize_survives_resume(spark, sim, tiny_job):
     d = _fresh("/tmp/sct_bresize_resume")
     p_stop = _params(d, max_epochs=4, **TINY)
