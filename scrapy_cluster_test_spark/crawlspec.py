@@ -4,10 +4,11 @@ Everything the synthetic web "serves" is a pure function of the image table
 (seed 42) — no wall clock, no randomness at fetch time. This module is the
 single source of truth shared by:
 
-* the distributed engine (numpy-vectorized forms, used inside Arrow batch
-  UDFs in sources/fetchsim.py);
-* the pure-Python oracle simulator (scalar forms, oracle/simulator.py);
-* the datagen (scrapy_cluster_test_spark/datagen.py).
+* the distributed engine (native Column forms of the integer functions
+  in crawlspec_sql.py, used by sources/fetchsim.py and operators/seen.py);
+* the datagen and the numpy reference kernels the native forms are pinned
+  against (numpy-vectorized forms);
+* the pure-Python oracle simulator (scalar forms, oracle/simulator.py).
 
 Reference semantics mirrored (SURVEY §2.4):
 * fetch outcome by page: 200 / retryable {404, 503} / empty-page → retry
@@ -22,7 +23,8 @@ Reference semantics mirrored (SURVEY §2.4):
 * robots gating by (domain, path_bucket) — absent in the reference
   (ROBOTSTXT_OBEY unset, SURVEY Q13), required by the north rule.
 
-Scalar and vectorized forms are parity-tested in tests/test_crawlspec.py.
+Scalar and vectorized forms are parity-tested in tests/test_crawlspec.py,
+the native forms in tests/test_native_kernels.py.
 """
 
 from __future__ import annotations

@@ -9,59 +9,48 @@ fingerprints are never deleted, so a Bloom filter (no deletes) suffices.
 
 Design (sandbox = small constants, same shape at scale):
 * the fp space is sharded by ``pmod(fp, n_shards)``; each shard is an
-  independent Bloom bitmap built DISTRIBUTED via applyInPandas over the
-  frontier's fps (one task per shard — numpy bit-ops, no Python loop),
-  held as a TABLE (shard int, bitmap binary) — nothing is collected to
-  the driver and nothing is broadcast whole;
+  independent Bloom bitmap held as a TABLE (shard int, words
+  array<bigint>): m_bits/64 words, bit b of the bitmap is bit b % 64 of
+  word b // 64 (the words' little-endian bytes are the byte bitmap
+  ``bitmap[b >> 3] & (1 << (b & 7))`` earlier versions stored). Nothing
+  is collected to the driver and nothing is broadcast whole;
+* every step is a native Spark expression — no Python worker runs: bit
+  positions are k-fold double hashing h1 + i·h2 of splitmix64
+  (crawlspec_sql), a build is an explode of positions aggregated with
+  ``bit_or`` per (shard, word), and a probe reads k words with ``get``;
 * the probe is shard-ROUTED (mark_probably_seen_routed): candidates
-  repartition by ``pmod(fp, n_shards)`` and cogroup with the table, so
-  each task receives exactly ONE shard's bitmap through the shuffle — at
-  10^10 fps and 10 bits/key (~12 GB of filter state across 256 shards)
-  no executor ever holds more than one ~48 MB shard;
-* bloom-negative → **definitely new** (no false negatives), skips the
-  join; bloom-positive → exact ``left_anti`` against the frontier fps
-  resolves false positives (filter_new_routed);
+  shuffle by ``pmod(fp, n_shards)`` and hash-join the shard table (a
+  shuffle-hash hint keeps it from being broadcast), so each task holds
+  exactly ONE shard's words — at 10^10 fps and 10 bits/key (~12 GB of
+  filter state across 256 shards) no executor holds more than one ~48 MB
+  shard;
+* bloom-negative → **definitely new** (no false negatives); bloom-positive
+  → exact ``left_anti`` against the frontier fps resolves false positives
+  (filter_new_routed). Both outcomes come out of ONE anti-join whose
+  condition includes ``maybe_seen``, so the probe runs once per call;
 * per-epoch "delta" = the fps inserted this epoch: ``bloom_or_new`` ORs
-  only the delta's bits into last epoch's bitmap table (set-union ==
-  bitwise OR — bit-identical to a full rebuild, asserted in tests), and
-  the epoch driver COMMITS the table with each epoch, so maintenance is
-  O(new) and resume restores the exact filter state. ``bloom_m_bits``
-  sizes the table up front; the epoch driver regrows it when the seen
-  set outgrows it.
+  only the delta's bits into last epoch's table (set-union == bitwise
+  OR — bit-identical to a full rebuild, asserted in tests), and the epoch
+  driver COMMITS the table with each epoch, so maintenance is O(new) and
+  resume restores the exact filter state. ``bloom_m_bits`` sizes the
+  table up front; the epoch driver regrows it when the seen set outgrows
+  it.
 
-Equivalence with the exact path is asserted in tests/test_seen_bloom.py,
-and the crawl reproduces the oracle simulator byte-for-byte.
+Bit-for-bit equality with the numpy reference kernels is asserted in
+tests/test_native_kernels.py, equivalence with the exact path in
+tests/test_seen_bloom.py, and the crawl reproduces the oracle simulator
+byte-for-byte.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import crawlspec as spec
+from .. import crawlspec_sql as csql
 
 _H2_SALT = 0xA5A5A5A5DEADBEEF
-
-
-def _probe_positions(fps: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    """(n, k) bit positions via double hashing h1 + i·h2 (Kirsch-Mitzenmacher)."""
-    u = fps.astype(np.uint64)
-    h1 = spec.mix64_np(u)
-    h2 = spec.mix64_np(u ^ np.uint64(_H2_SALT)) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
-
-
-def _set_bits(bitmap: np.ndarray, pos: np.ndarray) -> None:
-    np.bitwise_or.at(bitmap, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-
-
-def _test_bits(bitmap: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """(n, k) positions → (n,) all-bits-set boolean."""
-    got = (bitmap[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-    return got.all(axis=1)
 
 
 # design bits-per-key for bloom_m_bits and the fill-ratio resize trigger
@@ -88,26 +77,87 @@ def bloom_m_bits(
     )
 
 
+def _shard(n_shards: int) -> Column:
+    return F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int")
+
+
+def _with_hashes(df: DataFrame) -> DataFrame:
+    """``df`` plus _h1 = mix64(fp) and _h2 = mix64(fp ^ salt), side by side."""
+    fp = F.col("url_fp")
+    return csql.with_mix64(
+        df, {"_h1": fp, "_h2": fp.bitwiseXOR(F.lit(csql.s64(_H2_SALT)))}
+    )
+
+
+def _positions(m_bits: int, k: int) -> list[Column]:
+    """The k bit positions (h1 + i·(h2 | 1)) mod 2^64 mod m_bits
+    (Kirsch-Mitzenmacher double hashing), from ``_with_hashes``' columns,
+    in 32-bit limbs so that no sum overflows."""
+    assert m_bits % 64 == 0, m_bits
+    h1, h2 = F.col("_h1"), F.col("_h2").bitwiseOR(F.lit(1))
+    a_lo, a_hi = h1.bitwiseAND(F.lit(0xFFFFFFFF)), F.shiftrightunsigned(h1, 32)
+    b_lo, b_hi = h2.bitwiseAND(F.lit(0xFFFFFFFF)), F.shiftrightunsigned(h2, 32)
+    out = []
+    for i in range(k):
+        lo = a_lo + b_lo * F.lit(i)
+        hi = a_hi + b_hi * F.lit(i) + F.shiftrightunsigned(lo, 32)
+        out.append(
+            csql.umod_limbs(
+                hi.bitwiseAND(F.lit(0xFFFFFFFF)), lo.bitwiseAND(F.lit(0xFFFFFFFF)), m_bits
+            )
+        )
+    return out
+
+
+def _word_bits(fps_df: DataFrame, m_bits: int, k: int, n_shards: int) -> DataFrame:
+    """(shard, _bits map<int, bigint>): per non-empty shard, word index →
+    the OR of the bits the shard's fps set in that word."""
+    pos = _with_hashes(fps_df.select("url_fp")).select(
+        _shard(n_shards).alias("shard"),
+        F.explode(F.array(*_positions(m_bits, k))).alias("_p"),
+    )
+    bit = F.call_function(
+        "shiftleft", F.lit(1).cast("long"), F.col("_p").bitwiseAND(F.lit(63)).cast("int")
+    )
+    words = pos.groupBy(
+        "shard", F.shiftright(F.col("_p"), 6).cast("int").alias("_w")
+    ).agg(F.bit_or(bit).alias("_b"))
+    return words.groupBy("shard").agg(
+        F.map_from_entries(F.collect_list(F.struct("_w", "_b"))).alias("_bits")
+    )
+
+
+def _or_words(words: Column, bits: Column) -> Column:
+    """``words`` with each word OR-ed with its entry in the ``bits`` map.
+    A map lookup is a linear scan of its entries, so this costs
+    O(words · touched words) per shard. The guard references ``bits`` a
+    second time, so the optimizer keeps the map a column of the input
+    instead of inlining its construction into the per-word lambda (where
+    it would be rebuilt for every word)."""
+    return F.when(bits.isNull() | (F.size(bits) == 0), words).otherwise(
+        F.transform(
+            words,
+            lambda w, i: w.bitwiseOR(
+                F.coalesce(F.try_element_at(bits, i), F.lit(0).cast("long"))
+            ),
+        )
+    )
+
+
+def _zeros(m_bits: int) -> Column:
+    return F.array_repeat(F.lit(0).cast("long"), m_bits // 64)
+
+
 def build_bloom_table_fixed(
     fps_df: DataFrame, m_bits: int, k: int = 5, n_shards: int = 16
 ) -> DataFrame:
-    """Shard bitmaps as a TABLE (shard int, bitmap binary), one row per
-    non-empty shard of exactly m_bits/8 bytes (size it with ``bloom_m_bits``). The
-    routed probe cogroups candidates with this table, so each task
-    receives exactly ONE shard's bitmap via the shuffle — at 10^10 fps no
+    """Shard bitmaps as a TABLE (shard int, words array<bigint>), one row
+    per non-empty shard of exactly m_bits/64 words (size it with
+    ``bloom_m_bits``). The routed probe joins candidates to this table by
+    shard, so each task holds exactly ONE shard's words — at 10^10 fps no
     executor ever holds more than m_bits/8 bytes of filter state."""
-
-    def per_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        fps = pdf["url_fp"].to_numpy(np.int64)
-        _set_bits(bitmap, _probe_positions(fps, m_bits, k))
-        return pd.DataFrame({"shard": [int(key[0])], "bitmap": [bitmap.tobytes()]})
-
-    return (
-        fps_df.select("url_fp")
-        .withColumn("shard", F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int"))
-        .groupBy("shard")
-        .applyInPandas(per_shard, schema="shard int, bitmap binary")
+    return _word_bits(fps_df, m_bits, k, n_shards).select(
+        "shard", _or_words(_zeros(m_bits), F.col("_bits")).alias("words")
     )
 
 
@@ -119,34 +169,17 @@ def bloom_or_new(
     n_shards: int = 16,
 ) -> DataFrame:
     """The broadcast-plus-DELTA maintenance step (north rule): OR only the
-    NEW fps into last epoch's bitmap table — O(new) work per epoch instead
-    of an O(frontier) rebuild. Cogroup pairs each shard's new fps with its
-    previous bitmap; shards with no new fps pass through unchanged, shards
-    with no previous bitmap start from zeros. A Bloom filter never clears
-    bits, so set-union of key sets == bitwise OR of bitmaps — the
-    incremental table is bit-identical to a full rebuild at the same
-    m_bits (asserted in tests/test_seen_bloom.py)."""
-
-    def merge(fps: pd.DataFrame, bm: pd.DataFrame) -> pd.DataFrame:
-        if bm.empty:
-            shard = int(fps["shard"].iloc[0])
-            bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        else:
-            shard = int(bm["shard"].iloc[0])
-            bitmap = np.frombuffer(bm["bitmap"].iloc[0], dtype=np.uint8).copy()
-        if not fps.empty:
-            _set_bits(
-                bitmap, _probe_positions(fps["url_fp"].to_numpy(np.int64), m_bits, k)
-            )
-        return pd.DataFrame({"shard": [shard], "bitmap": [bitmap.tobytes()]})
-
-    tagged = new_fps.select("url_fp").withColumn(
-        "shard", F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int")
-    )
-    return (
-        tagged.groupBy("shard")
-        .cogroup(prev_bitmaps.groupBy("shard"))
-        .applyInPandas(merge, schema="shard int, bitmap binary")
+    NEW fps into last epoch's bitmap table — O(new) hashing per epoch
+    instead of an O(frontier) rebuild. A full outer join by shard pairs
+    each shard's new bits with its previous words; shards with no new fps
+    pass through unchanged, shards with no previous words start from
+    zeros. A Bloom filter never clears bits, so set-union of key sets ==
+    bitwise OR of bitmaps — the incremental table is bit-identical to a
+    full rebuild at the same m_bits (asserted in tests/test_seen_bloom.py)."""
+    new = _word_bits(new_fps, m_bits, k, n_shards)
+    return prev_bitmaps.select("shard", "words").join(new, "shard", "full_outer").select(
+        "shard",
+        _or_words(F.coalesce(F.col("words"), _zeros(m_bits)), F.col("_bits")).alias("words"),
     )
 
 
@@ -157,35 +190,26 @@ def mark_probably_seen_routed(
     k: int = 5,
     n_shards: int = 16,
 ) -> DataFrame:
-    """Shard-routed probe: candidates repartition by ``pmod(fp, n_shards)``
-    and COGROUP with the shard-bitmap table — each task probes only its
-    local shard's bitmap (shipped once per task through the shuffle, never
+    """Shard-routed probe: candidates shuffle by ``pmod(fp, n_shards)`` and
+    hash-join the shard table on the same key — each task probes only its
+    local shard's words (shipped once per task through the shuffle, never
     broadcast). Adds ``maybe_seen``."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(candidates.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
+    cols = candidates.columns
+    table = shard_bitmaps.select(
+        F.col("shard").alias("_shard"), F.col("words").alias("_words")
+    ).hint("shuffle_hash")
+    joined = _with_hashes(
+        candidates.withColumn("_shard", _shard(n_shards)).join(table, "_shard", "left")
     )
-    cand_cols = candidates.columns
-
-    def probe(cand: pd.DataFrame, bm: pd.DataFrame) -> pd.DataFrame:
-        cand = cand[cand_cols]
-        if cand.empty:
-            return cand.assign(maybe_seen=pd.Series([], dtype=bool))
-        if bm.empty:  # shard with no frontier fps → nothing can be seen
-            return cand.assign(maybe_seen=False)
-        bitmap = np.frombuffer(bm["bitmap"].iloc[0], dtype=np.uint8)
-        pos = _probe_positions(cand["url_fp"].to_numpy(np.int64), m_bits, k)
-        return cand.assign(maybe_seen=_test_bits(bitmap, pos))
-
-    tagged = candidates.withColumn(
-        "_shard", F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int")
-    )
-    return (
-        tagged.groupBy("_shard")
-        .cogroup(shard_bitmaps.groupBy(F.col("shard").alias("_shard")))
-        .applyInPandas(probe, schema=out_schema)
-    )
+    hit = None
+    for p in _positions(m_bits, k):
+        word = F.get(F.col("_words"), F.shiftright(p, 6).cast("int"))
+        bit = F.call_function(
+            "shiftrightunsigned", word, p.bitwiseAND(F.lit(63)).cast("int")
+        ).bitwiseAND(F.lit(1)) == 1
+        hit = bit if hit is None else hit & bit
+    # a shard with no table row holds no fps → nothing there can be seen
+    return joined.select(*cols, F.coalesce(hit, F.lit(False)).alias("maybe_seen"))
 
 
 def filter_new_routed(
@@ -198,14 +222,11 @@ def filter_new_routed(
 ) -> DataFrame:
     """Rows of ``candidates`` whose fp is NOT in ``frontier_fps``:
     bloom-negatives pass directly; bloom-positives take the exact
-    anti-join. Result set is identical to a plain left_anti (asserted in
-    tests/test_seen_bloom.py) — the bloom only cuts the join's probe
-    side."""
+    anti-join. One anti-join whose condition requires ``maybe_seen``
+    does both — a negative never matches, so it survives without a
+    lookup — and the probe is evaluated once. Result set is identical to
+    a plain left_anti (asserted in tests/test_seen_bloom.py)."""
     marked = mark_probably_seen_routed(candidates, shard_bitmaps, m_bits, k, n_shards)
-    negatives = marked.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    positives = (
-        marked.filter(F.col("maybe_seen"))
-        .drop("maybe_seen")
-        .join(frontier_fps, "url_fp", "left_anti")
-    )
-    return negatives.unionByName(positives)
+    seen = frontier_fps.select(F.col("url_fp").alias("_seen_fp"))
+    verify = (F.col("url_fp") == F.col("_seen_fp")) & F.col("maybe_seen")
+    return marked.join(seen, verify, "left_anti").drop("maybe_seen")

@@ -24,8 +24,9 @@ the deltas (the fetched rows), not a second table.
 A killed job resumes from the last `_COMMIT`ed epoch exactly (uncommitted
 partial writes are ignored and overwritten). Within one process the loop
 never re-reads that log: it carries the pending frontier, the seen-fp set
-and the Bloom table between epochs as checkpointed relations, and only a
-process's first epoch resolves the state from disk.
+and the Bloom table between epochs as checkpointed relations (bootstrap
+hands them to epoch 1), and only the first epoch of a resumed process
+resolves the state from disk.
 
 Determinism: no wall clock anywhere — crawl_time is a logical counter,
 seq a row_number over a total order ending in url_fp. The crawl log, final
@@ -166,9 +167,19 @@ def read_commit(job_dir: str, epoch: int) -> dict:
         return json.load(f)
 
 
-def bootstrap(spark: SparkSession, p: CrawlParams) -> None:
+def bootstrap(spark: SparkSession, p: CrawlParams, carry: dict | None = None) -> None:
     """Epoch 0: seeds → initial frontier snapshot and Bloom table (S4
-    seed-list source)."""
+    seed-list source).
+
+    The seed frontier is checkpointed once; its count is observed on that
+    action. The snapshot write and the Bloom build and write then run
+    concurrently. With ``carry`` (run_crawl's carried state), a third
+    concurrent job caches the dimension tables and pre-builds epoch 1's
+    pop, and the seed frontier, its fps and the Bloom table are handed to
+    epoch 1 as carried state — epoch 1 reads nothing back from disk,
+    like every later epoch."""
+    t_boot = time.perf_counter()
+    ph: dict[str, float] = {}
     seeds = spark.read.parquet(p.seeds_path)
     from ..functions import urlkit
 
@@ -193,24 +204,95 @@ def bootstrap(spark: SparkSession, p: CrawlParams) -> None:
     ed = _epoch_dir(p.job_dir, 0)
     if os.path.isdir(ed):
         shutil.rmtree(ed)
-    _null_audit(fr).write.parquet(os.path.join(ed, "frontier"))
-    seen_ops.build_bloom_table_fixed(
-        spark.read.parquet(os.path.join(ed, "frontier")).select("url_fp"),
-        _bloom_m_bits(p),
-        n_shards=p.bloom_shards,
-    ).write.parquet(os.path.join(ed, "bloom"))
-    pending = spark.read.parquet(os.path.join(ed, "frontier")).count()
+    m_bits = _bloom_m_bits(p)
+    obs = Observation()
+    t = time.perf_counter()
+    ck = fr.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    ph["ck"] = time.perf_counter() - t
+    pending = int(obs.get["n"])
+    rec = {
+        "epoch": 0,
+        "seq_base": 0,
+        "pending": pending,
+        "n_frontier": pending,
+        "bloom_m_bits": m_bits,
+    }
+
+    def _job_write() -> None:
+        t0 = time.perf_counter()
+        _null_audit(ck).write.parquet(os.path.join(ed, "frontier"))
+        ph["write"] = time.perf_counter() - t0
+
+    def _job_bloom() -> None:
+        t0 = time.perf_counter()
+        table = seen_ops.build_bloom_table_fixed(
+            ck.select("url_fp"), m_bits, n_shards=p.bloom_shards
+        ).localCheckpoint(eager=True)
+        table.write.parquet(os.path.join(ed, "bloom"))
+        if carry is not None:
+            carry["bloom"] = table
+        ph["bloom_write"] = time.perf_counter() - t0
+
+    def _job_dims_prepop() -> None:
+        t0 = time.perf_counter()
+        carry["dims"] = dims = _cache_dims(spark, p)
+        ph["dims"] = time.perf_counter() - t0
+        if pending > 0 and p.max_epochs >= 1:
+            _prepop(p, carry, 1, 0, rec, dims, ph)
+
+    jobs = [_job_write, _job_bloom]
+    if carry is not None:
+        carry["pending"] = ck
+        carry["seen"] = ck.select("url_fp")
+        jobs.append(_job_dims_prepop)
+    t = time.perf_counter()
+    _run_concurrently(jobs)
+    ph["tail"] = time.perf_counter() - t
+    ph["total"] = time.perf_counter() - t_boot
+    rec["phases"] = {k: round(v, 4) for k, v in ph.items()}
     with open(_commit_path(p.job_dir, 0), "w") as f:
-        json.dump(
-            {
-                "epoch": 0,
-                "seq_base": 0,
-                "pending": pending,
-                "n_frontier": pending,
-                "bloom_m_bits": _bloom_m_bits(p),
-            },
-            f,
-        )
+        json.dump(rec, f)
+
+
+def _run_concurrently(jobs: list) -> None:
+    """Run independent jobs from driver threads; join ALL before
+    re-raising the first failure."""
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        futs = [ex.submit(j) for j in jobs]
+        first_err = None
+        for fut in futs:
+            try:
+                fut.result()
+            except Exception as exc:
+                if first_err is None:
+                    first_err = exc
+        if first_err is not None:
+            raise first_err
+
+
+def _cache_dims(spark: SparkSession, p: CrawlParams) -> dict:
+    """The dimension tables, cached once for the crawl loop instead of
+    re-read from parquet by every epoch (a per-epoch fixed cost — scan
+    stage launch + file listing × hundreds of epochs — that never shrinks
+    with cores). The payload-join projection of the corpus is cached
+    PRE-PARTITIONED AND PRE-SORTED on the join keys, so each epoch's
+    payload join satisfies its required distribution/ordering straight
+    from the cache: only the O(popped) side is ever shuffled. At 10^10
+    this cached projection is ~24 B/row spread across the fleet
+    (spilling to local disk where it doesn't fit); the wide payload bytes
+    stay behind the bucket-pruned scan."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    im = (
+        spark.read.parquet(p.images_path)
+        .select("image_id", "img_bucket", "phash")
+        .repartition(n_part, "img_bucket", "image_id")
+        .sortWithinPartitions("img_bucket", "image_id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    dom = spark.read.parquet(p.domains_path).persist(StorageLevel.MEMORY_AND_DISK)
+    rob = spark.read.parquet(p.robots_path).persist(StorageLevel.MEMORY_AND_DISK)
+    im.count(), dom.count(), rob.count()  # materialize once, up front
+    return {"images": im, "domains": dom, "robots": rob}
 
 
 # extra audit columns carried on the snapshot rows touched this epoch —
@@ -407,6 +489,64 @@ def _build_popped(
     return pending, allowed, blocked, popped.persist(), big_pop
 
 
+def _prepop(
+    p: CrawlParams,
+    carry: dict,
+    epoch: int,
+    seq_base: int,
+    prev_view: dict,
+    dims: dict,
+    ph: dict,
+) -> None:
+    """EPOCH PIPELINING: pre-build ``epoch``'s pop/rank over the carried
+    pending checkpoint (carry["pending"]), from a tail of the epoch
+    before it. Its data-dependent hints (salt, big_pop, seq_base) come
+    from ``prev_view``, the commit-record values the consuming epoch will
+    see, so the pop is pure compute whose CPU overlaps the sibling tail
+    jobs' commit IO. The consuming run_epoch identity-checks the handoff
+    and rebuilds on any mismatch, and a prepop failure must not fail the
+    committed work — the fallback rebuild is identical by construction."""
+    global PREPOP_FALLBACKS
+    t0 = time.perf_counter()
+    caches: list = []
+    pop = None
+    try:
+        pnd, alw, blk, pop, big = _build_popped(
+            p, carry["pending"], dims["domains"], dims["robots"],
+            seq_base, prev_view, caches,
+        )
+        pop.count()  # materialize the rank into the persist
+        carry["prepop"] = {
+            "epoch": epoch,
+            "fr": carry["pending"],
+            "pending": pnd,
+            "allowed": alw,
+            "blocked": blk,
+            "popped": pop,
+            "big_pop": big,
+            "caches": caches,
+        }
+    except Exception as exc:
+        # correctness-safe (next epoch rebuilds identically), but NOT
+        # silent: count + warn + record, and release everything the
+        # partial build persisted (pop persists inside _build_popped
+        # before the count, so it may be live without being in caches)
+        PREPOP_FALLBACKS += 1
+        ph["prepop_fallback"] = 1.0
+        _log.warning(
+            "pipelined prepop for epoch %d failed, falling back to "
+            "serial rebuild: %r", epoch, exc,
+        )
+        for h in [pop, *caches]:
+            try:
+                if h is not None:
+                    h.unpersist()
+            except Exception:
+                pass
+        carry.pop("prepop", None)
+    ph["prepop"] = time.perf_counter() - t0
+
+
 def run_epoch(
     spark: SparkSession,
     p: CrawlParams,
@@ -482,6 +622,7 @@ def run_epoch(
         for _c in pre["caches"]:
             _c.unpersist()
         pre = None
+        _ph["prepop_stale"] = 1.0
     if pre is not None:
         pending, allowed, blocked = pre["pending"], pre["allowed"], pre["blocked"]
         popped, big_pop = pre["popped"], pre["big_pop"]
@@ -511,7 +652,7 @@ def run_epoch(
 
     # ---- frontier transition ------------------------------------------
     # persist: the candidate-fps subtree and the thinned semi-join both
-    # consume children — without this the mapInPandas fan-out runs twice
+    # consume children — without this the fan-out runs twice
     children = fetchsim.discover_children(fetched, p.n_images).persist()
     # INCREMENTAL bitmap table: last epoch's table (O(new) maintenance,
     # written below) instead of a rebuild from the full frontier every
@@ -532,18 +673,23 @@ def run_epoch(
         prev_bloom = os.path.join(_epoch_dir(p.job_dir, epoch - 1), "bloom")
         if os.path.isdir(prev_bloom):
             shard_bitmaps = spark.read.parquet(prev_bloom)
-        else:  # job dir written without a bloom table → one full rebuild
+            # a table from before the word layout holds a binary ``bitmap``
+            if "words" not in shard_bitmaps.columns:
+                shard_bitmaps = None
+        if shard_bitmaps is None:
+            # job dir written without a (current) bloom table → one full
+            # rebuild; this epoch's bloom job ORs into it and commits it
             shard_bitmaps = seen_ops.build_bloom_table_fixed(
                 frontier_fps, m_bits, n_shards=p.bloom_shards
             )
     # first-wins dedup within the epoch is not a seen-set concern;
     # enqueue_children handles it, so hand it the bloom-thinned candidate
     # set with an already-resolved seen check. Shard-ROUTED probe: each
-    # task ships exactly one shard bitmap — nothing is collected to the
-    # driver or broadcast whole. Only the DISTINCT 8-byte fps travel
-    # through the Arrow/Python probe; the wide child rows (url/domain
-    # strings) stay JVM-side and rejoin via a semi join on url_fp — whose
-    # shuffle the first-wins window in enqueue_children reuses.
+    # task holds exactly one shard's words — nothing is collected to the
+    # driver or broadcast whole. Only the DISTINCT 8-byte fps go through
+    # the probe's shuffle; the wide child rows (url/domain strings) rejoin
+    # via a semi join on url_fp — whose shuffle the first-wins window in
+    # enqueue_children reuses.
     cand_fps = children.select("url_fp").distinct()
     new_fps = seen_ops.filter_new_routed(
         cand_fps, frontier_fps, shard_bitmaps, m_bits,
@@ -762,60 +908,14 @@ def run_epoch(
     )
 
     def _job_carry_pending() -> None:
-        global PREPOP_FALLBACKS
         _t0 = time.perf_counter()
         carry["pending"] = nxt.localCheckpoint(eager=True)
         _ph["carry_pending"] = time.perf_counter() - _t0
-        # EPOCH PIPELINING: with the next pending checkpoint materialized,
-        # epoch k+1's pop/rank is pure compute over it — its data-
-        # dependent hints (salt, big_pop, seq_base) come from THIS epoch's
-        # commit-record values, all bound before the tail ran. Building it
-        # here overlaps the rank's CPU with the sibling tail jobs' commit
-        # IO; the next run_epoch identity-checks the handoff and rebuilds
-        # on any mismatch, and a prepop failure must not fail THIS epoch's
-        # committed work — the fallback rebuild is identical by
-        # construction.
-        if n_pending <= 0 or epoch + 1 > p.max_epochs:
-            return
-        _t1 = time.perf_counter()
-        caches2: list = []
-        pop2 = None
-        try:
-            nview = {"popped": n_popped, "pending": n_pending}
-            pnd2, alw2, blk2, pop2, big2 = _build_popped(
-                p, carry["pending"], domains, robots,
-                seq_base + n_popped, nview, caches2,
+        if n_pending > 0 and epoch + 1 <= p.max_epochs:
+            _prepop(
+                p, carry, epoch + 1, seq_base + n_popped,
+                {"popped": n_popped, "pending": n_pending}, dims, _ph,
             )
-            pop2.count()  # materialize the rank into the persist
-            carry["prepop"] = {
-                "epoch": epoch + 1,
-                "fr": carry["pending"],
-                "pending": pnd2,
-                "allowed": alw2,
-                "blocked": blk2,
-                "popped": pop2,
-                "big_pop": big2,
-                "caches": caches2,
-            }
-        except Exception as exc:
-            # correctness-safe (next epoch rebuilds identically), but NOT
-            # silent: count + warn + record, and release everything the
-            # partial build persisted (pop2 persists inside _build_popped
-            # before the count, so it may be live without being in caches2)
-            PREPOP_FALLBACKS += 1
-            _ph["prepop_fallback"] = 1.0
-            _log.warning(
-                "pipelined prepop for epoch %d failed, falling back to "
-                "serial rebuild: %r", epoch + 1, exc,
-            )
-            for _h in [pop2, *caches2]:
-                try:
-                    if _h is not None:
-                        _h.unpersist()
-                except Exception:
-                    pass
-            carry.pop("prepop", None)
-        _ph["prepop"] = time.perf_counter() - _t1
 
     # INCREMENTAL seen checkpoints: re-materializing the full seen set
     # every epoch is O(seen) per-epoch work that grows without bound.
@@ -867,17 +967,7 @@ def run_epoch(
     # overlap, so their sum exceeds the `tail` wall — that difference IS
     # the latency the overlap hides
     _t = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=len(tail)) as _ex:
-        _futs = [_ex.submit(j) for j in tail]
-        _first_err = None
-        for _fut in _futs:
-            try:
-                _fut.result()
-            except Exception as exc:  # join ALL before re-raising
-                if _first_err is None:
-                    _first_err = exc
-        if _first_err is not None:
-            raise _first_err
+    _run_concurrently(tail)
     _ph["tail"] = time.perf_counter() - _t
 
     for _h in _post_tail_release:
@@ -899,6 +989,13 @@ def run_epoch(
         # current per-shard bitmap size — next epoch's probe reads it
         # (positions are a function of m_bits) and resume restores it
         "bloom_m_bits": bloom_rec["m_bits"],
+        # seen keys over the committed table's design capacity; the
+        # resize trigger fires above bloom_resize_at
+        "bloom_fill": round(
+            n_frontier * seen_ops.BITS_PER_KEY / (bloom_rec["m_bits"] * p.bloom_shards), 6
+        ),
+        # the touched-row counters observed on the commit checkpoint
+        "counters": agg,
         # wall seconds per phase; tail jobs overlap, so they sum past
         # "tail"
         "phases": {k: round(v, 4) for k, v in _ph.items()},
@@ -969,7 +1066,6 @@ def _run_crawl_locked(
     spark: SparkSession, p: CrawlParams, resume: bool, lock: str
 ) -> dict:
     tokens: dict[str, str] = {}
-    dim_handles: list = []
     # `carry` holds the checkpointed state threaded between epochs
     # (run_epoch docstring); bound before the try so the finally can
     # drain it
@@ -985,7 +1081,7 @@ def _run_crawl_locked(
             if os.path.isdir(p.job_dir):
                 shutil.rmtree(p.job_dir)
             os.makedirs(p.job_dir, exist_ok=True)
-            bootstrap(spark, p)
+            bootstrap(spark, p, carry)
             last = 0
         state = read_commit(p.job_dir, last)
         # resume-time carry warm-up: the resumed process's first epoch
@@ -1002,29 +1098,8 @@ def _run_crawl_locked(
         ):
             _compact_snapshot(spark, p.job_dir, last)
         epoch = last
-        # Dim tables are cached once for the loop instead of re-read from
-        # parquet by every epoch (a per-epoch fixed cost — scan stage
-        # launch + file listing × hundreds of epochs — that never shrinks
-        # with cores). The payload-join projection of the corpus is cached
-        # PRE-PARTITIONED AND PRE-SORTED on the join keys, so each epoch's
-        # payload join satisfies its required distribution/ordering
-        # straight from the cache: only the O(popped) side is ever
-        # shuffled. At 10^10 this cached projection is ~24 B/row spread
-        # across the fleet (spilling to local disk where it doesn't fit);
-        # the wide payload bytes stay behind the bucket-pruned scan.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        im = (
-            spark.read.parquet(p.images_path)
-            .select("image_id", "img_bucket", "phash")
-            .repartition(n_part, "img_bucket", "image_id")
-            .sortWithinPartitions("img_bucket", "image_id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        dom = spark.read.parquet(p.domains_path).persist(StorageLevel.MEMORY_AND_DISK)
-        rob = spark.read.parquet(p.robots_path).persist(StorageLevel.MEMORY_AND_DISK)
-        dim_handles = [im, dom, rob]
-        im.count(), dom.count(), rob.count()  # materialize once, up front
-        carry["dims"] = {"images": im, "domains": dom, "robots": rob}
+        if "dims" not in carry:  # a bootstrap with carry cached them
+            carry["dims"] = _cache_dims(spark, p)
         while state["pending"] > 0 and epoch < p.max_epochs:
             epoch += 1
             state = run_epoch(
@@ -1044,7 +1119,7 @@ def _run_crawl_locked(
                     _h.unpersist()
                 except Exception:
                     pass
-        for _h in dim_handles:
+        for _h in carry.get("dims", {}).values():
             _h.unpersist()
         if tokens:
             proxy_ops.release_tokens(spark, p.proxies_path, tokens)

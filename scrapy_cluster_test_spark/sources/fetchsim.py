@@ -6,43 +6,29 @@ sandbox there is no network, so the "web" is a pure function of the image
 table (crawlspec.py): page j serves image j's payload; its status code and
 child links derive from image j's phash.
 
-Dataflow (all DataFrame ops; Python only inside Arrow batches):
+Dataflow (all native DataFrame ops; no Python worker runs):
 
-1. derive ``image_id`` from the URL path natively (regexp_extract) —
-   no UDF;
+1. derive ``image_id`` from the URL path (regexp_extract);
 2. join the popped batch against the images table. The popped side is
    tiny (≤ Σ budgets) so it broadcasts; the images table is partitioned by
    ``img_bucket`` so dynamic partition pruning skips untouched buckets —
    at 10^10 rows the scan reads only the buckets this epoch touches;
-3. one ``mapInPandas`` pass computes status codes and fans out child
-   links with vectorized numpy (no per-row Python).
+3. status codes and the child fan-out are integer arithmetic on phash
+   (crawlspec_sql's overflow-free splitmix64 and unsigned remainders).
 
-Child URL strings are built with vectorized pandas str ops; their
-fingerprints/domain hashes are computed NATIVELY afterwards
-(F.xxhash64 on the canonical URL) so the hot hashing path stays in the JVM.
+Child URL strings are assembled by JVM codegen from integer link targets,
+and their fingerprints/domain hashes are F.xxhash64 of the canonical URL,
+so the hot hashing path stays in the JVM.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import crawlspec as spec
+from .. import crawlspec_sql as csql
 from ..functions import urlkit
-
-FETCH_SCHEMA = (
-    "seq long, url_fp long, domain string, queue_kind string, priority int, "
-    "crawl_time long, retry_times int, provider string, status_code int, "
-    "image_id string, phash long"
-)
-
-CHILD_SCHEMA = (
-    "parent_seq long, parent_fp long, child_k int, j long, d int, queue_kind string"
-)
 
 
 def attach_image_id(popped: DataFrame) -> DataFrame:
@@ -102,90 +88,62 @@ def join_payload(
 
 def fetch_statuses(popped_with_payload: DataFrame) -> DataFrame:
     """Status codes are integer arithmetic on phash — native columns, no UDF."""
+    # crawlspec reads phash as unsigned, (phash & MASK) % m, which pmod on
+    # the signed value does not match
     p = F.col("phash")
-    # unsigned interpretation of the signed 64-bit phash, mod small primes:
-    # pmod on the signed value matches crawlspec's (phash & MASK) % m only
-    # when m divides 2^64-offset... it does not — so compute via the same
-    # two-limb trick: (phash & MASK) % m == pmod(pmod(2^32,m)*pmod(hi,m) + pmod(lo,m), m)
-    hi = F.shiftrightunsigned(p, 32)
-    lo = p.bitwiseAND(F.lit(0xFFFFFFFF))
-
-    def umod(m: int):
-        return F.pmod(F.pmod(F.lit((1 << 32) % m), m) * F.pmod(hi, m) + F.pmod(lo, m), m)
-
     return popped_with_payload.withColumn(
         "status_code",
-        F.when(umod(97) == 0, 503)
-        .when(umod(131) == 0, 404)
-        .when(umod(35) == 0, 520)
+        F.when(csql.umod(p, 97) == 0, 503)
+        .when(csql.umod(p, 131) == 0, 404)
+        .when(csql.umod(p, 35) == 0, 520)
         .otherwise(200)
         .cast("int"),
     )
 
 
-def _children_batches(n_images: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ok = pdf[pdf["status_code"] == 200]
-            if ok.empty:
-                continue
-            phash = ok["phash"].to_numpy(np.int64).view(np.uint64)
-            n_child = np.minimum(phash % np.uint64(35), np.uint64(spec.MAX_CHILDREN)).astype(
-                np.int64
-            )
-            parent_seq = ok["seq"].to_numpy(np.int64)
-            parent_fp = ok["url_fp"].to_numpy(np.int64)
-            child_kind = ok["ckind"].to_numpy()
-            out = []
-            for k in range(spec.MAX_CHILDREN):
-                mask = n_child > k
-                if not mask.any():
-                    break
-                j = spec.child_indices_np(phash[mask].view(np.int64), k, n_images)
-                d = spec.domain_id_np(j)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "parent_seq": parent_seq[mask],
-                            "parent_fp": parent_fp[mask],
-                            "child_k": np.full(mask.sum(), k, np.int32),
-                            "j": j,
-                            "d": d.astype(np.int32),
-                            "queue_kind": child_kind[mask],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return gen
-
-
 def discover_children(fetched: DataFrame, n_images: int) -> DataFrame:
     """200-pages → child link rows, with native fp/domain/bucket columns.
 
-    The Python stage stays pure numpy and emits ONLY integer link targets
-    (j, d) — the 10×-fanout URL strings are assembled afterwards by JVM
-    codegen (concat/lpad). Building them with pandas str ops inside the
-    UDF cost ~20 s/epoch at a 27M-child fan-out and dominated the Arrow
-    transfer; ints are 8 bytes each and the string never crosses the
-    Python boundary. (In a real crawl this stage parses payloads — the
-    same minimal-output rule applies: emit extraction results, not
-    re-serialized pages.)"""
-    src = fetched.select(
-        "seq",
-        "url_fp",
-        "status_code",
-        "phash",
-        # child kind derived natively BEFORE the UDF (offer pages yield
-        # sellers and vice versa) so the Python side never string-maps
-        F.when(F.col("queue_kind") == "asin", "seller")
-        .otherwise("asin")
-        .alias("ckind"),
+    All native Column arithmetic (crawlspec_sql), no Python stage: each
+    200 page explodes into its min(phash mod 35, MAX_CHILDREN) links,
+    child k of page p targets page j = mix64(p ^ (k+1)·γ) mod n_images on
+    domain d = domain_id(j), and the URL string is assembled afterwards
+    by codegen (concat/lpad) from the integers (j, d). (In a real crawl
+    this stage parses payloads — the same minimal-output rule applies:
+    emit extraction results, not re-serialized pages.)"""
+    # one (child_k, salt) struct per possible child; slice keeps the first n
+    links = F.array(
+        *[
+            F.struct(
+                F.lit(k).alias("child_k"),
+                F.lit(csql.s64((k + 1) * spec._SM_GAMMA)).alias("_salt"),
+            )
+            for k in range(spec.MAX_CHILDREN)
+        ]
     )
-    raw = src.mapInPandas(_children_batches(n_images), schema=CHILD_SCHEMA)
+    n_child = F.least(
+        csql.umod(F.col("phash"), 35), F.lit(spec.MAX_CHILDREN)
+    ).cast("int")
+    src = fetched.filter(F.col("status_code") == 200).select(
+        F.col("seq").alias("parent_seq"),
+        F.col("url_fp").alias("parent_fp"),
+        # offer pages yield sellers and vice versa
+        F.when(F.col("queue_kind") == "asin", "seller").otherwise("asin").alias("queue_kind"),
+        "phash",
+        F.inline(F.slice(links, 1, n_child)),
+    )
+    hj = csql.with_mix64(src, {"_hj": F.col("phash").bitwiseXOR(F.col("_salt"))})
+    hd = csql.with_mix64(
+        hj.select(
+            "parent_seq", "parent_fp", "child_k", "queue_kind",
+            csql.umod(F.col("_hj"), n_images).alias("j"),
+        ),
+        {"_hd": F.col("j")},
+    )
+    raw = hd.select(
+        "parent_seq", "parent_fp", "child_k", "j",
+        csql.domain_id(F.col("_hd")).alias("d"), "queue_kind",
+    )
     # Engine-constructed child URLs are canonical BY CONSTRUCTION (https,
     # lowercase host, no query/fragment), so canonicalize() — six
     # parse_url calls per row, ~20 s/epoch at a 27M fan-out — is skipped;

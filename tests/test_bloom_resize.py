@@ -91,7 +91,7 @@ def test_resize_triggers_and_crawl_identical(spark, sim, tiny_job):
     last = ep.last_committed_epoch(tiny_job)
     bm = spark.read.parquet(f"{tiny_job}/epoch={last:05d}/bloom").collect()
     assert len(bm) == 2
-    assert all(len(r.bitmap) == rec["bloom_m_bits"] // 8 for r in bm)
+    assert all(len(r.words) * 8 == rec["bloom_m_bits"] // 8 for r in bm)
 
 
 def test_resize_under_delta_carry(spark, tiny_job):
@@ -105,7 +105,7 @@ def test_resize_under_delta_carry(spark, tiny_job):
     for e in range(last + 1):
         m = ep.read_commit(tiny_job, e)["bloom_m_bits"]
         table = spark.read.parquet(f"{tiny_job}/epoch={e:05d}/bloom")
-        assert all(len(r.bitmap) == m // 8 for r in table.collect()), e
+        assert all(len(r.words) * 8 == m // 8 for r in table.collect()), e
         fps = ep._read_frontier_state(spark, tiny_job, e).select("url_fp")
         marked = seen_ops.mark_probably_seen_routed(
             fps, table, m, n_shards=TINY["bloom_shards"]

@@ -7,66 +7,26 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pytest
 
-from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.plans import epoch as ep
 
 from . import crawl_oracle as oracle
-
-DATA = "/tmp/sct_delta_data"
-N_IMAGES, N_SEEDS = 400, 8
-CAPS = dict(seller_cap=40, asin_cap=25)
-MAX_EPOCHS = 7
+from .shared_crawl import params as _params
 
 
 @pytest.fixture(scope="module")
-def sim(spark):
-    datagen.generate_all(spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS)
-    return oracle.simulate_universe(
-        DATA, N_IMAGES, N_SEEDS, max_epochs=MAX_EPOCHS, **CAPS
-    )
-
-
-def _params(job_dir, **kw):
-    kw.setdefault("compact_every", 3)
-    kw.setdefault("max_epochs", MAX_EPOCHS)
-    return ep.CrawlParams(
-        images_path=f"{DATA}/images.parquet",
-        seeds_path=f"{DATA}/seeds.parquet",
-        domains_path=f"{DATA}/domains.parquet",
-        robots_path=f"{DATA}/robots.parquet",
-        job_dir=job_dir,
-        n_images=N_IMAGES,
-        **CAPS,
-        **kw,
-    )
+def sim(crawl400_sim):
+    return crawl400_sim
 
 
 @pytest.fixture(scope="module")
-def full(spark, sim, tmp_path_factory):
+def full(crawl400):
     """One uninterrupted crawl; after every epoch, the carried pending and
     seen relations run_crawl hands to the next epoch are collected."""
-    job = str(tmp_path_factory.mktemp("delta") / "full")
-    carried = {}
-    real = ep.run_epoch
-
-    def spy(*args, **kwargs):
-        rec = real(*args, **kwargs)
-        carry = kwargs["carry_io"]
-        carried[rec["epoch"]] = (
-            sorted(tuple(r) for r in carry["pending"].collect()),
-            sorted(r.url_fp for r in carry["seen"].collect()),
-        )
-        return rec
-
-    ep.run_epoch = spy
-    try:
-        ep.run_crawl(spark, _params(job))
-    finally:
-        ep.run_epoch = real
-    return job, carried
+    return crawl400.job, crawl400.carried
 
 
 def test_delta_equals_cow(spark, sim, full):
@@ -160,3 +120,34 @@ def test_delta_torn_write_ignored(spark, sim, tmp_path):
     ).parquet(torn)
     ep.run_crawl(spark, _params(job))
     oracle.assert_matches_simulator(spark, job, sim)
+
+
+def test_resume_from_binary_bitmap_bloom(spark, sim, tmp_path):
+    """A job dir whose Bloom tables hold the earlier (shard, bitmap binary)
+    layout resumes: the first resumed epoch rebuilds the table once from
+    the seen set, commits it in the word layout, and the crawl equals the
+    simulator's."""
+    from . import kernel_reference as ref
+    from . import shared_crawl as sc
+
+    job = str(tmp_path / "legacy")
+    ep.run_crawl(spark, _params(job, max_epochs=1))
+    m_bits = ep.read_commit(job, 1)["bloom_m_bits"]
+    for e in (0, 1):
+        path = f"{job}/epoch={e:05d}/bloom"
+        rows = [
+            (r.shard, bytearray(ref.words_to_bitmap(r.words)))
+            for r in spark.read.parquet(path).collect()
+        ]
+        assert all(len(b) == m_bits // 8 for _, b in rows)
+        spark.createDataFrame(rows, "shard int, bitmap binary").write.parquet(
+            path + "_binary"
+        )
+        shutil.rmtree(path)
+        os.rename(path + "_binary", path)
+    ep.run_crawl(spark, _params(job, max_epochs=2))
+    sim2 = oracle.simulate_universe(
+        sc.DATA, sc.N_IMAGES, sc.N_SEEDS, max_epochs=2, **sc.CAPS
+    )
+    oracle.assert_matches_simulator(spark, job, sim2)
+    assert spark.read.parquet(f"{job}/epoch=00002/bloom").columns == ["shard", "words"]

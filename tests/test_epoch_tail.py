@@ -19,47 +19,21 @@ import os
 
 import pytest
 
-from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.operators import seen as seen_ops
 from scrapy_cluster_test_spark.plans import epoch as ep
 
 from . import crawl_oracle as oracle
-
-DATA = "/tmp/sct_tail_data"
-N_IMAGES, N_SEEDS = 400, 8
-CAPS = dict(seller_cap=40, asin_cap=25)
-MAX_EPOCHS = 7
+from .shared_crawl import params as _params
 
 
 @pytest.fixture(scope="module")
-def sim(spark):
-    datagen.generate_all(spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS)
-    return oracle.simulate_universe(
-        DATA, N_IMAGES, N_SEEDS, max_epochs=MAX_EPOCHS, **CAPS
-    )
-
-
-def _params(job_dir, **kw):
-    kw.setdefault("compact_every", 3)
-    kw.setdefault("max_epochs", MAX_EPOCHS)
-    return ep.CrawlParams(
-        images_path=f"{DATA}/images.parquet",
-        seeds_path=f"{DATA}/seeds.parquet",
-        domains_path=f"{DATA}/domains.parquet",
-        robots_path=f"{DATA}/robots.parquet",
-        job_dir=job_dir,
-        n_images=N_IMAGES,
-        **CAPS,
-        **kw,
-    )
+def sim(crawl400_sim):
+    return crawl400_sim
 
 
 @pytest.fixture(scope="module")
-def crawl(spark, sim, tmp_path_factory):
-    job = str(tmp_path_factory.mktemp("tail") / "job")
-    fallbacks_before = ep.PREPOP_FALLBACKS
-    ep.run_crawl(spark, _params(job))
-    return job, ep.PREPOP_FALLBACKS - fallbacks_before
+def crawl(crawl400):
+    return crawl400.job, crawl400.fallbacks
 
 
 def test_concurrent_tail_equals_serial(spark, sim, crawl):
@@ -72,19 +46,24 @@ def test_concurrent_tail_equals_serial(spark, sim, crawl):
 
 
 def test_pipelined_pop_equals_unpipelined(spark, sim, crawl):
-    """Epoch pipelining: every epoch after the first pops from the batch
-    the previous epoch's tail pre-built, and the crawl still equals the
-    simulator (both head paths run the same _build_popped over the same
-    carried checkpoint with the same commit-record-derived hints)."""
+    """Epoch pipelining: every epoch pops from the batch the previous
+    epoch's tail (for epoch 1, bootstrap) pre-built, and the crawl still
+    equals the simulator (both head paths run the same _build_popped over
+    the same carried checkpoint with the same commit-record-derived
+    hints)."""
     job, fallbacks = crawl
     # the crawl must actually pipeline: a prepop build failure falls back
     # to the serial rebuild (correct but slower), so a regression here
     # would otherwise be invisible (r6)
     assert fallbacks == 0
     last = ep.last_committed_epoch(job)
-    for e in range(1, last):
+    # bootstrap pre-builds epoch 1's pop like every epoch's tail does
+    assert "prepop" in ep.read_commit(job, 0)["phases"]
+    for e in range(1, last + 1):
         rec = ep.read_commit(job, e)
-        if rec["pending"] > 0:
+        # each epoch consumed the pop handed to it
+        assert "prepop_stale" not in rec["phases"], e
+        if e < last and rec["pending"] > 0:
             assert "prepop" in rec["phases"], (e, rec["phases"])
             assert "prepop_fallback" not in rec["phases"], e
     oracle.assert_matches_simulator(spark, job, sim)
@@ -126,14 +105,21 @@ def test_tail_failure_aborts_epoch_uncommitted(
 
 def test_commit_record_keys(crawl):
     """Each epoch's _COMMIT record explains the epoch on its own: the
-    counters resume needs, the Bloom size, and the wall time of every
-    phase, tail jobs included."""
+    counters resume needs, the Bloom size and fill, the touched-row
+    counters observed on the commit checkpoint, and the wall time of
+    every phase, tail jobs included."""
     job, _ = crawl
+    boot = ep.read_commit(job, 0)
+    assert {"epoch", "seq_base", "pending", "n_frontier", "bloom_m_bits"} <= set(boot)
+    assert {"ck", "write", "bloom_write", "dims", "prepop", "tail", "total"} <= set(
+        boot["phases"]
+    ), boot["phases"]
+    n_frontier = boot["n_frontier"]
     for e in range(1, ep.last_committed_epoch(job) + 1):
         rec = ep.read_commit(job, e)
         assert set(rec) == {
             "epoch", "seq_base", "pending", "popped", "n_frontier",
-            "bloom_m_bits", "phases",
+            "bloom_m_bits", "bloom_fill", "counters", "phases",
         }, rec
         assert rec["epoch"] == e
         ph = rec["phases"]
@@ -145,3 +131,14 @@ def test_commit_record_keys(crawl):
         assert ph["tail"] <= ph["total"]
         if e % 3 == 0:
             assert "compact" in ph, (e, ph)
+        c = rec["counters"]
+        assert set(c) == {
+            "n_popped", "n_new", "n_blocked", "n_ended",
+            "sc_200", "sc_404", "sc_429", "sc_503", "sc_520",
+        }, c
+        assert c["n_popped"] == rec["popped"]
+        assert c["n_popped"] == sum(v for k, v in c.items() if k.startswith("sc_"))
+        assert rec["n_frontier"] == n_frontier + c["n_new"]
+        n_frontier = rec["n_frontier"]
+        cap = rec["bloom_m_bits"] * 16 / seen_ops.BITS_PER_KEY
+        assert rec["bloom_fill"] == pytest.approx(rec["n_frontier"] / cap, rel=1e-4)
