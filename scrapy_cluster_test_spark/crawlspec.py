@@ -5,7 +5,7 @@ Everything the synthetic web "serves" is a pure function of the image table
 single source of truth shared by:
 
 * the distributed engine (native Column forms of the integer functions
-  in crawlspec_sql.py, used by sources/fetchsim.py and operators/seen.py);
+  in crawlspec_sql.py, used by sources/fetchsim.py);
 * the datagen and the numpy reference kernels the native forms are pinned
   against (numpy-vectorized forms);
 * the pure-Python oracle simulator (scalar forms, oracle/simulator.py).

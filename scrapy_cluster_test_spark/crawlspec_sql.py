@@ -1,13 +1,16 @@
 """Spark-native forms of crawlspec's 64-bit integer functions.
 
-The crawl path evaluates splitmix64 (``crawlspec.mix64``) and unsigned
-remainders inside the JVM, as plain Column arithmetic. Spark runs with
-ANSI arithmetic on, so a 64-bit product that wraps raises
-ARITHMETIC_OVERFLOW; every product here is therefore built from 16- and
-32-bit limbs whose partial sums stay below 2^63, and only bitwise
-operations (which never check overflow) touch the sign bit. A column holds
-the unsigned 64-bit value's bits as a signed ``bigint``, exactly as the
-numpy forms view ``uint64`` as ``int64``.
+The fetch simulation (sources/fetchsim.py: status codes and the child
+fan-out) must equal the oracle simulator, so it evaluates crawlspec's
+splitmix64 (``crawlspec.mix64``) and unsigned remainders inside the JVM,
+as plain Column arithmetic. Spark runs with ANSI arithmetic on, so a
+64-bit product that wraps raises ARITHMETIC_OVERFLOW; every product here
+is therefore built from 16- and 32-bit limbs whose partial sums stay
+below 2^63, and only bitwise operations (which never check overflow)
+touch the sign bit. A column holds the unsigned 64-bit value's bits as a
+signed ``bigint``, exactly as the numpy forms view ``uint64`` as
+``int64``. (The Bloom filter's bit positions need no such parity and use
+Spark's native ``xxhash64`` — operators/seen.py.)
 
 Plan size: every limb product references its operand several times, so a
 mix64 written as one nested expression re-inlines its input at each
@@ -117,17 +120,14 @@ def with_mix64(df: DataFrame, inputs: dict[str, Column]) -> DataFrame:
     return _bind(df, {n: _xorshift(_mul64(F.col(n), spec._SM_M2), 31) for n in inputs})
 
 
-def umod_limbs(hi: Column, lo: Column, m: int) -> Column:
-    """(hi·2^32 + lo) mod m for limbs 0 ≤ hi, lo < 2^32 and 0 < m < 2^31."""
+def umod(x: Column, m: int) -> Column:
+    """x, read as an unsigned 64-bit value, mod m (0 < m < 2^31): the
+    limbs hi·2^32 + lo reduced separately, so no product overflows."""
     assert 0 < m < 1 << 31, m
     return F.pmod(
-        F.pmod(hi, F.lit(m)) * F.lit((1 << 32) % m) + F.pmod(lo, F.lit(m)), F.lit(m)
+        F.pmod(_hi32(x), F.lit(m)) * F.lit((1 << 32) % m) + F.pmod(_lo32(x), F.lit(m)),
+        F.lit(m),
     )
-
-
-def umod(x: Column, m: int) -> Column:
-    """x, read as an unsigned 64-bit value, mod m (0 < m < 2^31)."""
-    return umod_limbs(_hi32(x), _lo32(x), m)
 
 
 def domain_id(h: Column, n_domains: int = spec.N_DOMAINS) -> Column:

@@ -15,9 +15,10 @@ Design (sandbox = small constants, same shape at scale):
   ``bitmap[b >> 3] & (1 << (b & 7))`` earlier versions stored). Nothing
   is collected to the driver and nothing is broadcast whole;
 * every step is a native Spark expression — no Python worker runs: bit
-  positions are k-fold double hashing h1 + i·h2 of splitmix64
-  (crawlspec_sql), a build is an explode of positions aggregated with
-  ``bit_or`` per (shard, word), and a probe reads k words with ``get``;
+  positions are k-fold double hashing h1 + i·h2 of two native
+  ``xxhash64`` values (BLOOM_HASH) masked to the power-of-two m_bits, a
+  build is an explode of positions aggregated with ``bit_or`` per
+  (shard, word), and a probe reads k words with ``get``;
 * the probe is shard-ROUTED (mark_probably_seen_routed): candidates
   shuffle by ``pmod(fp, n_shards)`` and hash-join the shard table (a
   shuffle-hash hint keeps it from being broadcast), so each task holds
@@ -52,6 +53,12 @@ from .. import crawlspec_sql as csql
 
 _H2_SALT = 0xA5A5A5A5DEADBEEF
 
+# The bit-position function of every table this module builds, recorded
+# in each epoch's commit record: a table committed without it (an older
+# job dir, whose positions came from splitmix64) is rebuilt on resume,
+# since probing it at these positions would give false negatives.
+BLOOM_HASH = "xxhash64"
+
 
 # design bits-per-key for bloom_m_bits and the fill-ratio resize trigger
 # (10 bits/key ≈ 1% false-positive rate at k=5). Single source of truth:
@@ -81,38 +88,25 @@ def _shard(n_shards: int) -> Column:
     return F.pmod(F.col("url_fp"), F.lit(n_shards)).cast("int")
 
 
-def _with_hashes(df: DataFrame) -> DataFrame:
-    """``df`` plus _h1 = mix64(fp) and _h2 = mix64(fp ^ salt), side by side."""
-    fp = F.col("url_fp")
-    return csql.with_mix64(
-        df, {"_h1": fp, "_h2": fp.bitwiseXOR(F.lit(csql.s64(_H2_SALT)))}
-    )
-
-
 def _positions(m_bits: int, k: int) -> list[Column]:
-    """The k bit positions (h1 + i·(h2 | 1)) mod 2^64 mod m_bits
-    (Kirsch-Mitzenmacher double hashing), from ``_with_hashes``' columns,
-    in 32-bit limbs so that no sum overflows."""
-    assert m_bits % 64 == 0, m_bits
-    h1, h2 = F.col("_h1"), F.col("_h2").bitwiseOR(F.lit(1))
-    a_lo, a_hi = h1.bitwiseAND(F.lit(0xFFFFFFFF)), F.shiftrightunsigned(h1, 32)
-    b_lo, b_hi = h2.bitwiseAND(F.lit(0xFFFFFFFF)), F.shiftrightunsigned(h2, 32)
-    out = []
-    for i in range(k):
-        lo = a_lo + b_lo * F.lit(i)
-        hi = a_hi + b_hi * F.lit(i) + F.shiftrightunsigned(lo, 32)
-        out.append(
-            csql.umod_limbs(
-                hi.bitwiseAND(F.lit(0xFFFFFFFF)), lo.bitwiseAND(F.lit(0xFFFFFFFF)), m_bits
-            )
-        )
-    return out
+    """The k bit positions (h1 + i·(h2 | 1)) mod m_bits of ``url_fp``
+    (Kirsch-Mitzenmacher double hashing) from two native xxhash64 values:
+    h1 = xxhash64(fp) and h2 = xxhash64(salt, fp), i.e. fp hashed under a
+    second seed. With m_bits a power of two each term is masked to
+    m_bits − 1 before the sum, so sums stay far below 2^63 (no ANSI
+    overflow) and (h2 | 1) stays odd — a full-period stride."""
+    assert m_bits >= 64 and m_bits & (m_bits - 1) == 0, m_bits
+    mask = F.lit(m_bits - 1)
+    fp = F.col("url_fp")
+    h1 = F.xxhash64(fp).bitwiseAND(mask)
+    h2 = F.xxhash64(F.lit(csql.s64(_H2_SALT)), fp).bitwiseOR(F.lit(1)).bitwiseAND(mask)
+    return [h1] + [(h1 + h2 * F.lit(i)).bitwiseAND(mask) for i in range(1, k)]
 
 
 def _word_bits(fps_df: DataFrame, m_bits: int, k: int, n_shards: int) -> DataFrame:
     """(shard, _bits map<int, bigint>): per non-empty shard, word index →
     the OR of the bits the shard's fps set in that word."""
-    pos = _with_hashes(fps_df.select("url_fp")).select(
+    pos = fps_df.select(
         _shard(n_shards).alias("shard"),
         F.explode(F.array(*_positions(m_bits, k))).alias("_p"),
     )
@@ -128,18 +122,17 @@ def _word_bits(fps_df: DataFrame, m_bits: int, k: int, n_shards: int) -> DataFra
 
 
 def _or_words(words: Column, bits: Column) -> Column:
-    """``words`` with each word OR-ed with its entry in the ``bits`` map.
-    A map lookup is a linear scan of its entries, so this costs
-    O(words · touched words) per shard. The guard references ``bits`` a
-    second time, so the optimizer keeps the map a column of the input
-    instead of inlining its construction into the per-word lambda (where
-    it would be rebuilt for every word)."""
-    return F.when(bits.isNull() | (F.size(bits) == 0), words).otherwise(
-        F.transform(
-            words,
-            lambda w, i: w.bitwiseOR(
-                F.coalesce(F.try_element_at(bits, i), F.lit(0).cast("long"))
-            ),
+    """``words`` with each word OR-ed with its entry in the ``bits`` map
+    (word index → bits), in one pass: the words become a map keyed by
+    their index and ``map_zip_with`` pairs it with ``bits`` through a hash
+    index on the integer keys, keeping the words' key order — O(words +
+    touched words) per shard."""
+    indexed = F.map_from_arrays(F.sequence(F.lit(0), F.size(words) - 1), words)
+    return F.when(bits.isNull(), words).otherwise(
+        F.map_values(
+            F.map_zip_with(
+                indexed, bits, lambda _, w, b: w.bitwiseOR(F.coalesce(b, F.lit(0).cast("long")))
+            )
         )
     )
 
@@ -198,8 +191,8 @@ def mark_probably_seen_routed(
     table = shard_bitmaps.select(
         F.col("shard").alias("_shard"), F.col("words").alias("_words")
     ).hint("shuffle_hash")
-    joined = _with_hashes(
-        candidates.withColumn("_shard", _shard(n_shards)).join(table, "_shard", "left")
+    joined = candidates.withColumn("_shard", _shard(n_shards)).join(
+        table, "_shard", "left"
     )
     hit = None
     for p in _positions(m_bits, k):

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
 import shutil
 import time
@@ -179,6 +180,7 @@ def bootstrap(spark: SparkSession, p: CrawlParams, carry: dict | None = None) ->
     epoch 1 as carried state — epoch 1 reads nothing back from disk,
     like every later epoch."""
     t_boot = time.perf_counter()
+    cg0 = _codegen_totals(spark)
     ph: dict[str, float] = {}
     seeds = spark.read.parquet(p.seeds_path)
     from ..functions import urlkit
@@ -216,6 +218,7 @@ def bootstrap(spark: SparkSession, p: CrawlParams, carry: dict | None = None) ->
         "pending": pending,
         "n_frontier": pending,
         "bloom_m_bits": m_bits,
+        "bloom_hash": seen_ops.BLOOM_HASH,
     }
 
     def _job_write() -> None:
@@ -250,6 +253,7 @@ def bootstrap(spark: SparkSession, p: CrawlParams, carry: dict | None = None) ->
     ph["tail"] = time.perf_counter() - t
     ph["total"] = time.perf_counter() - t_boot
     rec["phases"] = {k: round(v, 4) for k, v in ph.items()}
+    rec["codegen"] = _codegen_delta(spark, cg0)
     with open(_commit_path(p.job_dir, 0), "w") as f:
         json.dump(rec, f)
 
@@ -268,6 +272,31 @@ def _run_concurrently(jobs: list) -> None:
                     first_err = exc
         if first_err is not None:
             raise first_err
+
+
+def _codegen_totals(spark: SparkSession) -> tuple[int, int]:
+    """(classes compiled, compile nanoseconds) so far in this JVM: the
+    sample count of Spark's JVM-wide CodegenMetrics compilation-time
+    histogram (one sample per compiled class) and CodeGenerator's running
+    compile-time total. Driver-side reads; no Spark job."""
+    jvm = spark._jvm.org.apache.spark
+    return (
+        int(jvm.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()),
+        int(jvm.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()),
+    )
+
+
+def _codegen_delta(spark: SparkSession, before: tuple[int, int]) -> dict:
+    """Classes compiled, and their compile time, since ``before`` — the
+    whole JVM's, so a concurrent query elsewhere would be counted too."""
+    n, ns = _codegen_totals(spark)
+    return {"compiles": n - before[0], "compile_ms": round((ns - before[1]) / 1e6, 1)}
+
+
+def _bloom_fp_est(n_keys: int, m_bits: int, n_shards: int, k: int = 5) -> float:
+    """A Bloom filter's expected false-positive rate, (1 − e^(−k·n/m))^k,
+    with n keys spread over n_shards shards of m_bits bits."""
+    return float(f"{(1 - math.exp(-k * n_keys / (m_bits * n_shards))) ** k:.6g}")
 
 
 def _cache_dims(spark: SparkSession, p: CrawlParams) -> dict:
@@ -484,8 +513,9 @@ def _build_popped(
         popped = fr_ops.salted_repartition(
             popped, p.fetch_partitions, p.salt_buckets
         )
-    # persist: join_payload's bucket-set collect and the join itself both
-    # consume popped — without this the pop window would run twice
+    # persist: the prepop materializes the pop here for the next epoch's
+    # payload join (which, on a parquet scan, also collects its bucket
+    # set) — without this the pop window would run again
     return pending, allowed, blocked, popped.persist(), big_pop
 
 
@@ -572,6 +602,7 @@ def run_epoch(
     state in it; None (a one-off epoch) keeps nothing."""
     _caches: list = []
     _t_epoch = time.perf_counter()
+    cg0 = _codegen_totals(spark)
     carry = carry_io if carry_io is not None else {}
     # State, two layers:
     #
@@ -600,7 +631,8 @@ def run_epoch(
             eager=True
         )
         frontier_fps = fr.select("url_fp")
-    dims = carry.get("dims") or {
+    cached_dims = carry.get("dims")
+    dims = cached_dims or {
         "images": spark.read.parquet(p.images_path),
         "domains": spark.read.parquet(p.domains_path),
         "robots": spark.read.parquet(p.robots_path),
@@ -636,11 +668,14 @@ def run_epoch(
     payload = fetchsim.join_payload(
         popped,
         images,
-        # bucket pruning pays only when caps bound the pop AND the batch
-        # is small; an uncapped or known-fat epoch touches every bucket,
-        # so skip the extra job barrier
+        # bucket pruning pays only on a parquet scan, when caps bound the
+        # pop AND the batch is small; an uncapped or known-fat epoch
+        # touches every bucket, and a filter on the cached, pre-partitioned
+        # dims projection prunes nothing — skip the extra job barrier
         prune_buckets=(
-            (p.seller_cap is not None or p.asin_cap is not None) and not big_pop
+            cached_dims is None
+            and (p.seller_cap is not None or p.asin_cap is not None)
+            and not big_pop
         ),
     )
     _ph["pop+buckets"] = time.perf_counter() - _t
@@ -671,14 +706,17 @@ def run_epoch(
     shard_bitmaps = carry.get("bloom")
     if shard_bitmaps is None:
         prev_bloom = os.path.join(_epoch_dir(p.job_dir, epoch - 1), "bloom")
-        if os.path.isdir(prev_bloom):
+        # positions are also a function of the hash: a table committed
+        # without this BLOOM_HASH (older job dirs: splitmix64 positions,
+        # some in a binary-bitmap layout) would give false negatives, so
+        # it — like a missing table — is rebuilt once from the seen set;
+        # this epoch's bloom job ORs into the rebuild and commits it
+        if (
+            prev_state.get("bloom_hash") == seen_ops.BLOOM_HASH
+            and os.path.isdir(prev_bloom)
+        ):
             shard_bitmaps = spark.read.parquet(prev_bloom)
-            # a table from before the word layout holds a binary ``bitmap``
-            if "words" not in shard_bitmaps.columns:
-                shard_bitmaps = None
-        if shard_bitmaps is None:
-            # job dir written without a (current) bloom table → one full
-            # rebuild; this epoch's bloom job ORs into it and commits it
+        else:
             shard_bitmaps = seen_ops.build_bloom_table_fixed(
                 frontier_fps, m_bits, n_shards=p.bloom_shards
             )
@@ -800,6 +838,15 @@ def run_epoch(
     # threads only APPEND here (GIL-atomic); the release loop after the
     # pool joins is the barrier.
     _post_tail_release: list = [ck]
+    # Whether run_crawl will run another epoch in this process (its loop
+    # condition, from this epoch's record). Without one, the carries
+    # would only be dropped: their jobs are skipped and the handles this
+    # epoch took over are released past the tail barrier.
+    carry_on = carry_io is not None and n_pending > 0 and epoch < p.max_epochs
+    if not carry_on:
+        _post_tail_release.extend(carry.pop("seen_parts", []))
+        carry.pop("pending", None)
+        carry.pop("seen", None)
 
     def _job_delta_write() -> None:
         _t0 = time.perf_counter()
@@ -880,17 +927,18 @@ def run_epoch(
             )
         # materialize once, then BOTH the disk write and next epoch's two
         # consumers read the checkpointed blocks — disk bytes and carried
-        # bytes are the same relation by construction. The old handle (or,
-        # for a one-off epoch, the new one) is released after the tail
+        # bytes are the same relation by construction. The old handle (and,
+        # when no epoch follows, the new one) is released after the tail
         # barrier.
         new_table = new_table.localCheckpoint(eager=True)
         new_table.write.parquet(os.path.join(ed, "bloom"))
-        old = carry.get("bloom")
-        carry["bloom"] = new_table
-        if carry_io is None:
-            _post_tail_release.append(new_table)
-        elif old is not None:
+        old = carry.pop("bloom", None)
+        if old is not None:
             _post_tail_release.append(old)
+        if carry_on:
+            carry["bloom"] = new_table
+        else:
+            _post_tail_release.append(new_table)
         _ph["bloom_write"] = time.perf_counter() - _t0
 
     tail.append(_job_bloom)
@@ -911,11 +959,10 @@ def run_epoch(
         _t0 = time.perf_counter()
         carry["pending"] = nxt.localCheckpoint(eager=True)
         _ph["carry_pending"] = time.perf_counter() - _t0
-        if n_pending > 0 and epoch + 1 <= p.max_epochs:
-            _prepop(
-                p, carry, epoch + 1, seq_base + n_popped,
-                {"popped": n_popped, "pending": n_pending}, dims, _ph,
-            )
+        _prepop(
+            p, carry, epoch + 1, seq_base + n_popped,
+            {"popped": n_popped, "pending": n_pending}, dims, _ph,
+        )
 
     # INCREMENTAL seen checkpoints: re-materializing the full seen set
     # every epoch is O(seen) per-epoch work that grows without bound.
@@ -945,7 +992,7 @@ def run_epoch(
             carry["seen"] = old_seen.unionByName(inc)
         _ph["carry_seen"] = time.perf_counter() - _t0
 
-    if carry_io is not None:
+    if carry_on:
         tail += [_job_carry_pending, _job_carry_seen]
 
     # SQL VALUES → LocalRelation: createDataFrame(list) planned a Python
@@ -989,16 +1036,24 @@ def run_epoch(
         # current per-shard bitmap size — next epoch's probe reads it
         # (positions are a function of m_bits) and resume restores it
         "bloom_m_bits": bloom_rec["m_bits"],
+        # the position function of the committed table (resume rebuilds
+        # a table committed without it)
+        "bloom_hash": seen_ops.BLOOM_HASH,
         # seen keys over the committed table's design capacity; the
         # resize trigger fires above bloom_resize_at
         "bloom_fill": round(
             n_frontier * seen_ops.BITS_PER_KEY / (bloom_rec["m_bits"] * p.bloom_shards), 6
         ),
+        # the committed table's expected false-positive rate at k = 5
+        "bloom_fp_est": _bloom_fp_est(n_frontier, bloom_rec["m_bits"], p.bloom_shards),
         # the touched-row counters observed on the commit checkpoint
         "counters": agg,
         # wall seconds per phase; tail jobs overlap, so they sum past
         # "tail"
         "phases": {k: round(v, 4) for k, v in _ph.items()},
+        # classes the JVM compiled during the epoch (0 once every plan
+        # shape of the crawl is in the codegen cache) and their time
+        "codegen": _codegen_delta(spark, cg0),
     }
     # Fencing: the epoch's data files are all written by now, but nothing
     # is visible until the _COMMIT marker lands. If this writer's job

@@ -65,6 +65,20 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static: read once, when the JVM first
+        # compiles). The default 100 entries is smaller than ONE crawl
+        # epoch's working set, so every epoch recompiled its code from
+        # scratch (137-177 classes per epoch, a second identical crawl
+        # as many again). A whole crawl compiles 246 distinct classes
+        # (perfbench's 2-epoch crawl) to 424 (8 epochs, 200 seeds, caps
+        # 300/300), measured on a 4-core VM; 4,096 holds that with room
+        # for the catalog's, so a process compiles each plan shape once
+        # (the epoch records' ``codegen`` counts show it).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # PySpark's per-call call-site capture (a Python stack walk and
+        # extra Py4J round trips for every Column built) feeds only error
+        # messages; off, the driver's Py4J traffic per crawl falls ~3×.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     for k, v in (extra_conf or {}).items():

@@ -2,7 +2,8 @@
 (test_delta_mode, test_epoch_tail, test_native_kernels): a 400-image
 universe, 8 seeds, caps 40/25, 7 epochs, compaction every 3 epochs. The
 ``crawl400`` fixture in conftest.py runs it once per session and records,
-after every epoch, the carried pending rows and seen fps, plus the
+after every epoch that hands state to a next one, the carried pending
+rows and seen fps; the carry keys left after the final epoch; and the
 physical plan of every SQL execution the crawl ran."""
 
 from __future__ import annotations
@@ -36,8 +37,11 @@ def params(job_dir: str, **kw) -> ep.CrawlParams:
 @dataclass
 class Crawl:
     job: str
-    # epoch → (sorted carried pending rows, sorted carried seen fps)
+    # epoch → (sorted carried pending rows, sorted carried seen fps), for
+    # every epoch but the last (which carries nothing)
     carried: dict
+    # keys of run_crawl's carry dict after the final epoch
+    final_carry: list
     # prepop fallbacks counted during the crawl
     fallbacks: int
     # physical plan descriptions of the SQL executions the crawl ran
@@ -57,15 +61,18 @@ def _executions(spark) -> list:
 
 def run(spark, job: str) -> Crawl:
     carried = {}
+    final_carry: list = []
     real = ep.run_epoch
 
     def spy(*args, **kwargs):
         rec = real(*args, **kwargs)
         carry = kwargs["carry_io"]
-        carried[rec["epoch"]] = (
-            sorted(tuple(r) for r in carry["pending"].collect()),
-            sorted(r.url_fp for r in carry["seen"].collect()),
-        )
+        final_carry[:] = sorted(carry)
+        if "pending" in carry:
+            carried[rec["epoch"]] = (
+                sorted(tuple(r) for r in carry["pending"].collect()),
+                sorted(r.url_fp for r in carry["seen"].collect()),
+            )
         return rec
 
     before = max((i for i, _ in _executions(spark)), default=-1)
@@ -76,7 +83,7 @@ def run(spark, job: str) -> Crawl:
     finally:
         ep.run_epoch = real
     plans = [plan for i, plan in _executions(spark) if i > before]
-    return Crawl(job, carried, ep.PREPOP_FALLBACKS - fallbacks, plans)
+    return Crawl(job, carried, final_carry, ep.PREPOP_FALLBACKS - fallbacks, plans)
 
 
 PYTHON_EXEC_NODES = (

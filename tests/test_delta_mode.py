@@ -6,14 +6,17 @@ the log it summarizes, and resume-safety."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
+import numpy as np
 import pytest
 
 from scrapy_cluster_test_spark.plans import epoch as ep
 
 from . import crawl_oracle as oracle
+from . import kernel_reference as ref
 from .shared_crawl import params as _params
 
 
@@ -26,13 +29,13 @@ def sim(crawl400_sim):
 def full(crawl400):
     """One uninterrupted crawl; after every epoch, the carried pending and
     seen relations run_crawl hands to the next epoch are collected."""
-    return crawl400.job, crawl400.carried
+    return crawl400.job, crawl400.carried, crawl400.final_carry
 
 
 def test_delta_equals_cow(spark, sim, full):
     """The log-structured crawl equals the simulator, which holds the
     whole frontier state each epoch the way a full snapshot would."""
-    job, _ = full
+    job, _, _ = full
     oracle.assert_matches_simulator(spark, job, sim)
 
     # write volume: delta commits carry ONLY touched rows — well under
@@ -63,14 +66,16 @@ def test_delta_equals_cow(spark, sim, full):
 
 
 def test_delta_bloom_carry_equals_cow(spark, full):
-    """The carried state IS the committed log: after every epoch the
-    carried pending relation equals the disk resolve's pending rows, and
-    the carried seen set equals its fps. Regression test for the bug
-    where the carried SEEN set held only pending fps: the Bloom
-    exact-verification anti-join (seen.filter_new_routed) then
-    re-enqueued already-done URLs."""
-    job, carried = full
-    assert sorted(carried) == list(range(1, ep.last_committed_epoch(job) + 1))
+    """The carried state IS the committed log: after every epoch that a
+    next one follows, the carried pending relation equals the disk
+    resolve's pending rows, and the carried seen set equals its fps; the
+    final epoch carries nothing. Regression test for the bug where the
+    carried SEEN set held only pending fps: the Bloom exact-verification
+    anti-join (seen.filter_new_routed) then re-enqueued already-done
+    URLs."""
+    job, carried, final_carry = full
+    assert sorted(carried) == list(range(1, ep.last_committed_epoch(job)))
+    assert not {"pending", "seen", "seen_parts", "bloom", "prepop"} & set(final_carry)
     for e, (pending, seen) in carried.items():
         state = ep._read_frontier_state(spark, job, e)
         disk_pending = sorted(
@@ -122,32 +127,72 @@ def test_delta_torn_write_ignored(spark, sim, tmp_path):
     oracle.assert_matches_simulator(spark, job, sim)
 
 
+def _as_pre_xxhash(spark, job: str, binary: bool) -> None:
+    """Rewrite a job dir as one written before ``seen.BLOOM_HASH``: every
+    commit record without the ``bloom_hash`` key, and every Bloom table
+    rebuilt from its epoch's seen set at the earlier splitmix64 positions
+    — as (shard, words) or, with ``binary``, the (shard, bitmap binary)
+    layout before that."""
+    for e in range(ep.last_committed_epoch(job) + 1):
+        rec = ep.read_commit(job, e)
+        del rec["bloom_hash"]
+        with open(ep._commit_path(job, e), "w") as f:
+            json.dump(rec, f)
+        fps = np.array(
+            [r.url_fp for r in ep._read_frontier_state(spark, job, e).collect()], np.int64
+        )
+        bitmaps = ref.bloom_bitmaps(
+            fps, rec["bloom_m_bits"], 5, 16, positions=ref.probe_positions_splitmix
+        )
+        assert bitmaps != ref.bloom_bitmaps(fps, rec["bloom_m_bits"], 5, 16)
+        if binary:
+            rows = [(s, bytearray(b)) for s, b in bitmaps.items()]
+            schema = "shard int, bitmap binary"
+        else:
+            rows = [(s, ref.bitmap_to_words(b)) for s, b in bitmaps.items()]
+            schema = "shard int, words array<bigint>"
+        path = f"{job}/epoch={e:05d}/bloom"
+        spark.createDataFrame(rows, schema).write.parquet(path + "_old")
+        shutil.rmtree(path)
+        os.rename(path + "_old", path)
+
+
+def _resumes_to_simulator(spark, sim, job: str) -> None:
+    """Resuming ``job`` rebuilds the Bloom table once at the current
+    positions, commits it with its ``bloom_hash``, and the crawl equals
+    the simulator's."""
+    first = ep.last_committed_epoch(job) + 1
+    ep.run_crawl(spark, _params(job))
+    oracle.assert_matches_simulator(spark, job, sim)
+    rec = ep.read_commit(job, first)
+    assert rec["bloom_hash"] == "xxhash64"
+    table = spark.read.parquet(f"{job}/epoch={first:05d}/bloom")
+    assert table.columns == ["shard", "words"]
+    fps = np.array(
+        [r.url_fp for r in ep._read_frontier_state(spark, job, first).collect()], np.int64
+    )
+    assert {
+        r.shard: ref.words_to_bitmap(r.words) for r in table.collect()
+    } == ref.bloom_bitmaps(fps, rec["bloom_m_bits"], 5, 16)
+
+
 def test_resume_from_binary_bitmap_bloom(spark, sim, tmp_path):
     """A job dir whose Bloom tables hold the earlier (shard, bitmap binary)
     layout resumes: the first resumed epoch rebuilds the table once from
     the seen set, commits it in the word layout, and the crawl equals the
     simulator's."""
-    from . import kernel_reference as ref
-    from . import shared_crawl as sc
-
     job = str(tmp_path / "legacy")
     ep.run_crawl(spark, _params(job, max_epochs=1))
-    m_bits = ep.read_commit(job, 1)["bloom_m_bits"]
-    for e in (0, 1):
-        path = f"{job}/epoch={e:05d}/bloom"
-        rows = [
-            (r.shard, bytearray(ref.words_to_bitmap(r.words)))
-            for r in spark.read.parquet(path).collect()
-        ]
-        assert all(len(b) == m_bits // 8 for _, b in rows)
-        spark.createDataFrame(rows, "shard int, bitmap binary").write.parquet(
-            path + "_binary"
-        )
-        shutil.rmtree(path)
-        os.rename(path + "_binary", path)
+    _as_pre_xxhash(spark, job, binary=True)
+    _resumes_to_simulator(spark, sim, job)
+
+
+def test_resume_from_pre_xxhash_bloom(spark, sim, tmp_path):
+    """A job dir whose Bloom tables hold splitmix64 positions in the word
+    layout, and whose records have no ``bloom_hash``, resumes equal to the
+    simulator: probed at the xxhash64 positions, its tables would answer
+    "unseen" for seen URLs, which would then be enqueued again."""
+    job = str(tmp_path / "pre_xxhash")
     ep.run_crawl(spark, _params(job, max_epochs=2))
-    sim2 = oracle.simulate_universe(
-        sc.DATA, sc.N_IMAGES, sc.N_SEEDS, max_epochs=2, **sc.CAPS
-    )
-    oracle.assert_matches_simulator(spark, job, sim2)
-    assert spark.read.parquet(f"{job}/epoch=00002/bloom").columns == ["shard", "words"]
+    _as_pre_xxhash(spark, job, binary=False)
+    _resumes_to_simulator(spark, sim, job)

@@ -15,6 +15,7 @@ concurrency down:
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -103,31 +104,51 @@ def test_tail_failure_aborts_epoch_uncommitted(
     oracle.assert_matches_simulator(spark, job, sim)
 
 
+def _assert_codegen(rec: dict) -> None:
+    cg = rec["codegen"]
+    assert set(cg) == {"compiles", "compile_ms"}, cg
+    assert cg["compiles"] >= 0 and cg["compile_ms"] >= 0, cg
+
+
 def test_commit_record_keys(crawl):
     """Each epoch's _COMMIT record explains the epoch on its own: the
-    counters resume needs, the Bloom size and fill, the touched-row
-    counters observed on the commit checkpoint, and the wall time of
-    every phase, tail jobs included."""
+    counters resume needs, the Bloom size, position hash, fill and
+    estimated false-positive rate, the touched-row counters observed on
+    the commit checkpoint, the wall time of every phase, tail jobs
+    included, and the classes compiled during the epoch. The final epoch
+    runs no carry jobs: no next epoch would consume them."""
     job, _ = crawl
     boot = ep.read_commit(job, 0)
-    assert {"epoch", "seq_base", "pending", "n_frontier", "bloom_m_bits"} <= set(boot)
+    assert {
+        "epoch", "seq_base", "pending", "n_frontier", "bloom_m_bits", "bloom_hash",
+    } <= set(boot)
+    assert boot["bloom_hash"] == seen_ops.BLOOM_HASH
     assert {"ck", "write", "bloom_write", "dims", "prepop", "tail", "total"} <= set(
         boot["phases"]
     ), boot["phases"]
+    _assert_codegen(boot)
     n_frontier = boot["n_frontier"]
-    for e in range(1, ep.last_committed_epoch(job) + 1):
+    last = ep.last_committed_epoch(job)
+    for e in range(1, last + 1):
         rec = ep.read_commit(job, e)
         assert set(rec) == {
-            "epoch", "seq_base", "pending", "popped", "n_frontier",
-            "bloom_m_bits", "bloom_fill", "counters", "phases",
+            "epoch", "seq_base", "pending", "popped", "n_frontier", "bloom_m_bits",
+            "bloom_hash", "bloom_fill", "bloom_fp_est", "counters", "phases",
+            "codegen",
         }, rec
         assert rec["epoch"] == e
+        assert rec["bloom_hash"] == seen_ops.BLOOM_HASH
         ph = rec["phases"]
+        carries = {"carry_pending", "carry_seen"}
         assert {
-            "pop_rank", "ck", "write", "bloom_write", "carry_pending",
-            "carry_seen", "metrics", "tail", "total",
+            "pop_rank", "ck", "write", "bloom_write", "metrics", "tail", "total",
         } <= set(ph), ph
+        if e < last:
+            assert carries <= set(ph), (e, ph)
+        else:
+            assert not carries & set(ph), (e, ph)
         assert all(isinstance(v, float) and v >= 0 for v in ph.values()), ph
+        _assert_codegen(rec)
         assert ph["tail"] <= ph["total"]
         if e % 3 == 0:
             assert "compact" in ph, (e, ph)
@@ -142,3 +163,21 @@ def test_commit_record_keys(crawl):
         n_frontier = rec["n_frontier"]
         cap = rec["bloom_m_bits"] * 16 / seen_ops.BITS_PER_KEY
         assert rec["bloom_fill"] == pytest.approx(rec["n_frontier"] / cap, rel=1e-4)
+        kn_m = 5 * rec["n_frontier"] / (rec["bloom_m_bits"] * 16)
+        assert rec["bloom_fp_est"] == pytest.approx((1 - math.exp(-kn_m)) ** 5, rel=1e-4)
+
+
+def test_repeated_crawl_compiles_nothing(spark, sim, tmp_path):
+    """A process compiles each plan shape of the crawl once: a second,
+    identical crawl right after the first finds every generated class in
+    the codegen cache, so none of its epochs compiles anything. (With
+    Spark's default 100-entry cache one epoch's classes evict the last
+    epoch's and every epoch recompiles.)"""
+    for name in ("first", "second"):
+        ep.run_crawl(spark, _params(str(tmp_path / name), max_epochs=3))
+    job = str(tmp_path / "second")
+    compiles = {
+        e: ep.read_commit(job, e)["codegen"]["compiles"]
+        for e in range(ep.last_committed_epoch(job) + 1)
+    }
+    assert len(compiles) == 4 and not any(compiles.values()), compiles

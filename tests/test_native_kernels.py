@@ -1,8 +1,9 @@
 """The crawl's native kernels equal their numpy references
 (tests/kernel_reference.py) bit for bit, and a crawl runs no Python:
-splitmix64 and the unsigned remainder at the int64 edges, the Bloom table
-at several sizes, the Bloom probe, the child fan-out, and every physical
-plan of a multi-epoch crawl."""
+splitmix64 and the unsigned remainder at the int64 edges, the Bloom
+filter's xxhash64 bit positions, the Bloom table at several sizes, the
+Bloom probe, the child fan-out, and every physical plan of a multi-epoch
+crawl."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 from scrapy_cluster_test_spark import crawlspec as spec
 from scrapy_cluster_test_spark import crawlspec_sql as csql
+from scrapy_cluster_test_spark.functions import xxh64
 from scrapy_cluster_test_spark.operators import seen
 from scrapy_cluster_test_spark.plans import epoch as ep
 from scrapy_cluster_test_spark.sources import fetchsim
@@ -54,6 +56,26 @@ def test_mix64_umod_domain_match_crawlspec(spark):
         assert r.h & spec.MASK == spec.mix64(v & spec.MASK), v
 
 
+def test_bloom_positions_match_reference(spark):
+    """The Bloom filter's hashes — Spark's xxhash64 of fp and of
+    (salt, fp) — and the bit positions built from them equal the
+    pure-Python XXH64 reference, the int64 edges included."""
+    rng = np.random.default_rng(5)
+    x = np.concatenate([np.array(EDGES, np.int64), _random_longs(rng, 2000)])
+    m_bits = 65536
+    rows = _longs(spark, x, "url_fp").select(
+        "url_fp",
+        F.xxhash64("url_fp").alias("h1"),
+        F.xxhash64(F.lit(csql.s64(seen._H2_SALT)), "url_fp").alias("h2"),
+        F.array(*seen._positions(m_bits, 5)).alias("pos"),
+    ).collect()
+    got = [r.url_fp for r in rows]
+    assert [r.h1 for r in rows] == [xxh64.xxh64_long(v) for v in got]
+    assert [r.h2 for r in rows] == [xxh64.xxh64_long2(seen._H2_SALT, v) for v in got]
+    want = ref.probe_positions(np.array(got, np.int64), m_bits, 5)
+    assert (np.array([r.pos for r in rows], np.int64) == want).all()
+
+
 @pytest.fixture(scope="module")
 def fps():
     rng = np.random.default_rng(3)
@@ -67,7 +89,10 @@ def test_bloom_table_matches_reference(spark, fps, m_bits):
     unseen."""
     df = _longs(spark, fps, "url_fp")
     want = ref.bloom_bitmaps(fps, m_bits, 5, 8)
-    table = seen.build_bloom_table_fixed(df, m_bits, n_shards=8).cache()
+    table = seen.build_bloom_table_fixed(df, m_bits, n_shards=8)
+    # (planned before caching, which would substitute the cached relation)
+    plan = table._jdf.queryExecution().optimizedPlan().toString()
+    table = table.cache()
     rows = table.collect()
     assert all(len(r.words) == m_bits // 64 for r in rows)
     assert {r.shard: ref.words_to_bitmap(r.words) for r in rows} == want
@@ -81,10 +106,11 @@ def test_bloom_table_matches_reference(spark, fps, m_bits):
 
     marked = seen.mark_probably_seen_routed(df, table, m_bits, n_shards=8)
     assert marked.filter(~F.col("maybe_seen")).count() == 0
-    # the map of touched words stays a column: inlined into the per-word
-    # lambda it would be rebuilt for every word
-    plan = table._jdf.queryExecution().executedPlan().toString()
-    assert all("map_from_entries" not in ln for ln in plan.splitlines() if "transform(" in ln)
+    # the OR is one hash-indexed pass over each shard's words
+    # (map_zip_with keyed by word index), not a lookup per word into the
+    # map of touched words, which Spark answers by a linear scan
+    assert "map_zip_with(" in plan, plan
+    assert "element_at(" not in plan and "transform(" not in plan, plan
     table.unpersist()
 
 
